@@ -369,8 +369,10 @@ object Bench {
       else {
         val s8End = runShared8()
         val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+        // cores = the session's width (local[N]), not the box's: the
+        // `contended` load test is relative to what the run used
         Some(Sentinel(s8Start, s8End, os.getSystemLoadAverage,
-          Runtime.getRuntime.availableProcessors))
+          spark.sparkContext.defaultParallelism))
       }
     // spread + packed minima + summary stay the LAST three lines (tail
     // contract); the streaming line sits just above them so its

@@ -9,10 +9,19 @@ import graft.model.{SampleTier, Schemas}
 import graft.operators._
 import graft.sources.LandingFormat
 import graft.store.DayPartitionedTable
+import graft.util.Par
 
 /** The orchestrated driver — the reference's `make import`
-  * (Makefile:17-22): activity → flow → email → counts → daily summary,
-  * in order (the summary depends on activity_events being loaded).
+  * (Makefile:17-22). The reference runs activity → flow → email →
+  * counts → daily summary in order, but only one edge of that chain is
+  * a data dependency: the daily summary reads activity_events. [[run]]
+  * therefore runs the dependency DAG
+  * {{{
+  *   activity → summaries  ∥  flow  ∥  email  ∥  counts,  then compact
+  * }}}
+  * as four concurrent [[graft.util.Par]] items; each pipeline keeps its
+  * own per-tier Par inside, which nests. The pipelines write disjoint
+  * tables.
   *
   * Landing layout (one dir per pipeline, day files inside):
   * {{{
@@ -29,7 +38,7 @@ import graft.store.DayPartitionedTable
   *
   * `formats` selects each event pipeline's landing WIRE format
   * ("activity" / "flow" / "email" → [[LandingFormat]], default CSV) —
-  * the whole Makefile-order orchestration runs unchanged over
+  * the whole orchestration runs unchanged over
   * JSON-lines landings, because everything downstream of readDay is
   * format-blind. The counts pipeline reads the reference's fixed
   * 3-field basic-metrics TXT (import_counts.py) and has no second
@@ -53,22 +62,34 @@ final class RunImport(
   val counts = new CountsImporter(warehouse, countsBegin)
   val summaries = new DailySummaries(warehouse, activity, tiers)
 
-  /** Run every pipeline; returns days imported per pipeline. */
+  /** Run every pipeline; returns days imported per pipeline. If a
+    * pipeline fails, the others still run to completion, and `run`
+    * throws the first failure (in activity, flow, email, counts order)
+    * only after every pipeline has stopped writing; nothing is
+    * compacted then. */
   def run(
       spark: SparkSession,
       dayFrom: Option[LocalDate] = None,
       dayUntil: Option[LocalDate] = None,
       forceReload: Boolean = false): Map[String, Seq[LocalDate]] = {
-    val a = activity.run(spark, s"$landingRoot/activity", "activity",
-      dayFrom, dayUntil, forceReload)
-    val f = flow.run(spark, s"$landingRoot/flow", "flow",
-      dayFrom, dayUntil, forceReload)
-    val e = email.run(spark, s"$landingRoot/email", "email-events",
-      dayFrom, dayUntil, forceReload)
-    val c = counts.run(spark, s"$landingRoot/counts", "fxa-basic-metrics",
-      forceReload)
-    if (activity.maxExtantDay(spark).isDefined) summaries.summarize(spark)
-    val imported = Map("activity" -> a, "flow" -> f, "email" -> e, "counts" -> c)
+    val pipelines = Seq[(String, () => Seq[LocalDate])](
+      "activity" -> { () =>
+        val days = activity.run(spark, s"$landingRoot/activity", "activity",
+          dayFrom, dayUntil, forceReload)
+        if (activity.maxExtantDay(spark).isDefined) summaries.summarize(spark)
+        days
+      },
+      "flow" -> { () =>
+        flow.run(spark, s"$landingRoot/flow", "flow", dayFrom, dayUntil, forceReload)
+      },
+      "email" -> { () =>
+        email.run(spark, s"$landingRoot/email", "email-events",
+          dayFrom, dayUntil, forceReload)
+      },
+      "counts" -> { () =>
+        counts.run(spark, s"$landingRoot/counts", "fxa-basic-metrics", forceReload)
+      })
+    val imported = Par.map(pipelines) { case (name, pipeline) => name -> pipeline() }.toMap
     compact(spark, imported)
     imported
   }

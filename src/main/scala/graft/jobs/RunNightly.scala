@@ -74,7 +74,11 @@ object RunNightly {
     * `maxStep` (default 5 = all) exists for MEASUREMENT, not
     * operation: `maxStep = 4` is the control that isolates step 5's
     * (tokenizer) marginal cost in the round-12 BASELINE attribution
-    * — the composed gate's growth is measured, not assumed. */
+    * — the composed gate's growth is measured, not assumed.
+    *
+    * The five families run concurrently; if one fails, the others
+    * still run to completion, and `tick` throws the first failure only
+    * after every family has stopped writing its state dir. */
   def tick(
       spark: SparkSession,
       stateDir: String,

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** MANIFEST-POINTER SNAPSHOT TABLE — the minimal transactional core of
@@ -146,20 +147,26 @@ class SnapshotTable(root: String, dayCol: String = "day") {
     df.withColumn("_p", col(dayCol).cast("string"))
       .write.mode("overwrite").partitionBy("_p").parquet(stage)
     val fs = fsOf(spark)
+    // directory names are Hive-escaped (':' → %3A, ...): the manifest
+    // keys the RAW day, the path keeps the escaped directory name
     val PartRe = "_p=(.+)".r
-    val days = fs.listStatus(new Path(stage)).toSeq
+    val dirs = fs.listStatus(new Path(stage)).toSeq
       .map(_.getPath.getName).collect { case PartRe(d) => d }.sorted
-    if (days.isEmpty) {
+    def failFast(ok: Boolean, msg: => String): Unit = if (!ok) {
       fs.delete(new Path(stage), true) // no staged garbage on fail-fast
-      require(days.nonEmpty, s"SnapshotTable $root: commit with no rows")
+      require(ok, s"SnapshotTable $root: $msg")
     }
-    days.foreach { d =>
+    failFast(dirs.nonEmpty, "commit with no rows")
+    failFast(!dirs.contains(ExternalCatalogUtils.DEFAULT_PARTITION_NAME),
+      s"commit with a null $dayCol")
+    dirs.foreach { d =>
       if (!fs.rename(new Path(stage, s"_p=$d"), new Path(stage, s"day=$d")))
         throw new java.io.IOException(
           s"SnapshotTable $root: staging rename of day=$d failed")
     }
     val carried = cur.map(_._2).getOrElse(Map.empty)
-    val mapping = carried ++ days.map(d => d -> s"v$vNew-$token/day=$d").toMap
+    val mapping = carried ++ dirs.map(d =>
+      ExternalCatalogUtils.unescapePathName(d) -> s"v$vNew-$token/day=$d").toMap
     (vNew, mapping)
   }
 

@@ -1,54 +1,51 @@
 package graft.util
 
-import java.util.concurrent.Executors
+import java.util.concurrent.{ForkJoinPool, FutureTask, TimeUnit}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.util.Try
 
 /** Bounded parallel execution for independent Spark jobs (e.g. the
   * three sample tiers of one import day — separate output tables, no
   * shared state). The Spark scheduler interleaves concurrently
-  * submitted jobs across executor slots, which a serial per-tier loop
-  * leaves idle.
+  * submitted jobs across executor slots, which a serial loop leaves
+  * idle.
   *
-  * Nested calls run INLINE: the fixed pool blocks its callers with
-  * Await, so a Par call from inside a Par task would deadlock once
-  * all pool threads block awaiting inner futures. Re-entry is detected
-  * by thread name and degrades to the sequential loop — same results,
-  * no extra parallelism, no deadlock.
+  * Nesting: calls nest freely and really run in parallel. The caller
+  * first runs every item no pool thread has started yet, then waits
+  * for the rest through `ForkJoinPool.managedBlock`; the pool replaces
+  * a pool thread parked there with a spare, so `width` threads stay
+  * runnable and a Par call inside a Par task cannot deadlock.
+  *
+  * Failure: `map`/`foreach` wait for EVERY item to finish, then
+  * rethrow the first failure in input order. A call that throws has
+  * therefore left no sibling still running or writing.
   */
 object Par {
-  private val threadName = "graft-par"
-
   /** Pool width: cores/4, floored at the historical 4 (round-15
     * measurement: the per-day ingest pipelines submit ~30 tiny
     * single-task jobs; at width 4 they drain in ~8 serialized waves
-    * of ~200 ms scheduling latency each on a 32-core box). Each
-    * submitted job is day/tier-sized and independent, so the width
-    * scales with the machine rather than pinning to either a laptop
-    * or this box. */
-  private val pool = ExecutionContext.fromExecutorService(
-    Executors.newFixedThreadPool(
-      math.max(4, Runtime.getRuntime.availableProcessors / 4), r => {
-      val t = new Thread(r, threadName)
-      t.setDaemon(true)
-      t
-    }))
+    * of ~200 ms scheduling latency each on a 32-core box). */
+  private val width = math.max(4, Runtime.getRuntime.availableProcessors / 4)
+  private val pool = new ForkJoinPool( // minimumRunnable = width
+    width, ForkJoinPool.defaultForkJoinWorkerThreadFactory, null, false,
+    width, width + 256, width, null, 60, TimeUnit.SECONDS)
 
-  private def onParThread: Boolean =
-    Thread.currentThread().getName == threadName
+  private def await[B](t: FutureTask[Try[B]]): Try[B] = {
+    ForkJoinPool.managedBlock(new ForkJoinPool.ManagedBlocker {
+      def block(): Boolean = { t.get(); true }
+      def isReleasable: Boolean = t.isDone
+    })
+    t.get()
+  }
 
-  def foreach[A](items: Seq[A])(f: A => Unit): Unit =
-    if (items.sizeIs <= 1 || onParThread) items.foreach(f)
-    else {
-      implicit val ec: ExecutionContext = pool
-      Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf): Unit
-    }
+  def foreach[A](items: Seq[A])(f: A => Unit): Unit = map(items)(f): Unit
 
   def map[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.sizeIs <= 1 || onParThread) items.map(f)
+    if (items.sizeIs <= 1) items.map(f)
     else {
-      implicit val ec: ExecutionContext = pool
-      Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
+      val tasks = items.toVector.map(a => new FutureTask(() => Try(f(a))))
+      tasks.foreach(t => pool.execute(t))
+      tasks.foreach(_.run()) // no-op for an item a pool thread has started
+      tasks.map(await).map(_.get)
     }
 }

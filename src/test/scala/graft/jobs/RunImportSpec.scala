@@ -2,9 +2,13 @@ package graft.jobs
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec, Tables}
+import graft.model.Schemas
 import graft.sources.{CsvEventSource, JsonEventSource, LandingFormat}
 import graft.util.TmpDirs
 
@@ -100,6 +104,49 @@ class RunImportSpec extends SparkSpec {
       rows(csvJob.summaries.multiDeviceTable(tier))
     // idempotence holds for the JSON form too (same window → no-op)
     jsonJob.run(spark, from, until).values.foreach(_ shouldBe Seq.empty)
+  }
+
+  test("a flow day over MAXERROR fails the run only after every other pipeline has stopped") {
+    val root = TmpDirs.fresh("spec-runimport-fail-landing")
+    val wh = TmpDirs.fresh("spec-runimport-fail-wh")
+    val day = LocalDate.parse("2024-01-03")
+    def oneDay(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("day").cast("string") === day.toString)
+    CsvEventSource.writeLanding(spark,
+      oneDay(SparkEntry.activityStaging(spark, sfSmoke)), s"$root/activity", "activity")
+    CsvEventSource.writeLanding(spark,
+      oneDay(SparkEntry.flowStaging(spark, sfSmoke)), s"$root/flow", "flow")
+    CsvEventSource.writeLanding(spark,
+      oneDay(SparkEntry.emailStaging(spark, sfSmoke)), s"$root/email", "email-events")
+    CsvEventSource.appendLines(spark, s"$root/counts/fxa-basic-metrics-$day.txt",
+      Seq(s"$day,10,7"))
+    // right field count, non-numeric timestamp: each line is one error
+    val badLine = ("x" +: Seq.fill(Schemas.flow.columns.size)("")).mkString(",")
+    CsvEventSource.appendLines(spark, s"$root/flow/flow-$day.csv", Seq.fill(150)(badLine))
+
+    val job = new RunImport(wh, root, countsBegin = LocalDate.parse("2024-01-01"))
+    intercept[CsvEventSource.MaxErrorExceeded] {
+      job.run(spark, Some(day), Some(day))
+    }
+    def files: Set[(String, Long, Long)] =
+      FileUtils.listFiles(new java.io.File(wh), null, true).asScala
+        .map(f => (f.getPath, f.length, f.lastModified)).toSet
+    val atThrow = files
+    // every other pipeline has finished the day, row for row
+    Seq((job.activity, s"$root/activity/activity-$day.csv"),
+        (job.email, s"$root/email/email-events-$day.csv")).foreach { case (imp, file) =>
+      val typed = imp.typedStaging(CsvEventSource.readDay(spark, file, imp.family, persist = false))
+      job.tiers.foreach { tier =>
+        imp.table(tier).read(spark).count() shouldBe
+          imp.tierSlice(typed, tier, day, day).count()
+      }
+    }
+    job.counts.table.days(spark) shouldBe Seq(day)
+    // nothing is still running, and nothing lands after the throw
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.statusTracker.getActiveJobIds() shouldBe empty
+    Thread.sleep(1000)
+    files shouldBe atThrow
   }
 
   test("D4: compact() restores fragmented touched partitions to target file counts") {

@@ -142,6 +142,33 @@ class SnapshotTableSpec extends SparkSpec {
     t.readDays(spark, Seq("2030-01-01")).count() shouldBe 0
   }
 
+  test("day keys round-trip whatever their characters are (space, ':')") {
+    val t = mkTable("escape")
+    val odd = Seq(("2024-02-01 am", 1L, "v1"), ("2024-02-01T10:00", 2L, "v1"))
+      .toDF("day", "event_id", "mark")
+    t.commitDays(spark, odd) shouldBe 1
+    // the manifest keys the raw day, not its Hive-escaped directory name
+    t.current(spark).get._2.keySet shouldBe Set("2024-02-01 am", "2024-02-01T10:00")
+    t.readDays(spark, Seq("2024-02-01T10:00")).select("event_id").as[Long]
+      .collect() shouldBe Array(2L)
+    t.readDays(spark, Seq("2024-02-01 am")).select("event_id").as[Long]
+      .collect() shouldBe Array(1L)
+    t.read(spark).count() shouldBe 2
+  }
+
+  test("a null day fails fast and stages nothing") {
+    val dir = TmpDirs.fresh("snaptab_nullday")
+    val t = new SnapshotTable(dir)
+    t.commitDays(spark, days(1, "v1"))
+    val bad = Seq(("2024-02-02", 7L, "v2"), (null: String, 8L, "v2"))
+      .toDF("day", "event_id", "mark")
+    intercept[IllegalArgumentException] {
+      t.commitDays(spark, bad)
+    }.getMessage should include("null day")
+    t.current(spark).get._1 shouldBe 1
+    new java.io.File(dir).list().count(_.startsWith("v")) shouldBe 1
+  }
+
   test("empty commit fails fast") {
     val t = mkTable("empty")
     intercept[IllegalArgumentException] {

@@ -58,8 +58,8 @@ class SpreadGateSpec extends SparkSpec {
     try {
       val out = Spread.byKeyIfNarrow(in, col("id"))
       hasSpread(out) shouldBe false
-      // give the async listener bus a beat, then assert no job ran
-      Thread.sleep(500)
+      // deliver every queued listener event, then assert no job ran
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       jobs.get shouldBe 0
     } finally spark.sparkContext.removeSparkListener(l)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
