@@ -3,6 +3,7 @@ package graft.operators
 import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,32 +18,33 @@ import graft.store.DayPartitionedTable
   * Statement-by-statement mapping (reference lines in
   * import_flow_events.py):
   *
-  *  1/2. clear+insert day-d `flow_metadata` from staging `flow.begin`
-  *       rows, sampled by flow_id cohort (`:104-149`) → dynamic
-  *       partition overwrite of `export_date=d`.
   *  3.   DELETE `flow.begin` from permanent events (`:151-155`, D3) →
   *       the permanent write already excludes ALL control events
   *       (begin/continued/experiment) via the importer's insertFilter;
-  *       the update windows below re-derive day-d's
+  *       the update window below re-derives day-d's
   *       "begin-deleted-but-continued-still-present" intermediate state
   *       from the staging lineage, so ordering semantics are preserved
   *       without rewriting the partition three times.
-  *  4.   UPDATE duration/locale/uid from `GROUP BY flow_id MAX(...)`
-  *       over permanent days d ∪ d+1 (`:157-175`, C2 + I2 late-data).
-  *  5/6. UPDATE completed / new_account flags from `flow.complete` /
-  *       `account.created` in the window (`:177-205`, C3 semi-join).
+  *  4/5/6/8. ONE per-flow aggregate over permanent days d ∪ d+1
+  *       (`:157-205,242-261`, C2 + I2 late-data, C3 semi-joins, F3):
+  *       MAX duration/locale/uid, the `flow.complete` /
+  *       `account.created` flags, and the day-d `flow.continued.%` type
+  *       that continued_from = SUBSTRING(type,16,64) is cut from.
   *  7.   metrics-context backfill — CASE-on-'' merge of 9 columns from
   *       the day's staging aggregate, only for days before the
-  *       historical cutoff (`:207-240,344-352`, B8).
-  *  8/9. UPDATE continued_from = SUBSTRING(type,16,64) from day-d
-  *       `flow.continued.%` rows, then absorb them (`:242-261`, F3).
-  * 10-12. clear+insert day-d `flow_experiments` from
-  *       `flow.experiment.%` staging rows (SPLIT_PART name/cohort, F4),
-  *       UPDATE uid from the window fold, absorb (`:263-304`).
+  *       historical cutoff (`:207-240,344-352`, B8); the one full-outer
+  *       join onto the aggregate, since staging holds begin-only flows
+  *       the window lacks.
+  *  1/2 + 4-9. clear day-d `flow_metadata`, then ONE rewrite: the
+  *       on-disk rows in the update horizon plus the day-d inserts from
+  *       staging `flow.begin` rows, sampled by flow_id cohort
+  *       (`:104-149`), left-joined to the aggregate.
+  *  10/11 + 12. the same for `flow_experiments`: day-d
+  *       `flow.experiment.%` inserts (SPLIT_PART name/cohort, F4), uid
+  *       updated from the aggregate, the rows absorbed (`:263-304`).
   *
-  * All update build sides are one-day aggregates — broadcast joins —
-  * and metadata rewrites touch only the partitions that contain matched
-  * flow_ids (collected driver-side from the joined frame).
+  * Each rewrite writes only the partitions that contain a matched flow
+  * (collected driver-side from the joined frame), plus day d.
   *
   * `updateHorizon` bounds the update scan to metadata partitions with
   * export_date ≥ day − horizon. Flows span at most 2 calendar days by
@@ -91,10 +93,9 @@ final class FlowPipeline(
     "context", "entrypoint", "migration", "service", "utm_campaign",
     "utm_content", "utm_medium", "utm_source", "utm_term")
 
-  /** Q_INSERT_METADATA (`:109-149`): begin rows → metadata, sampled. */
-  private def metadataInsert(typed: DataFrame, tier: SampleTier, day: LocalDate): DataFrame =
-    typed
-      .filter(col("cohort") < tier.percent)
+  /** Q_INSERT_METADATA (`:109-149`): begin rows → metadata. */
+  private def metadataInsert(sampled: DataFrame, day: LocalDate): DataFrame =
+    sampled
       .filter(col("type") === "flow.begin") // B5
       .select(
         (col("flow_id") +:
@@ -108,6 +109,21 @@ final class FlowPipeline(
           lit(null).cast(StringType).as("continued_from") :+
           lit(day.toString).cast(DateType).as("export_date"): _*)
 
+  /** Q_INSERT_EXPERIMENTS: experiment rows, SPLIT_PART name/cohort (F4). */
+  private def experimentsInsert(sampled: DataFrame, day: LocalDate): DataFrame =
+    sampled
+      .filter(col("type").like("flow.experiment.%"))
+      .select(
+        splitPart(col("type"), ".", 3).as("experiment"),
+        splitPart(col("type"), ".", 4).as("cohort"),
+        epochSecondsToTs(col("timestamp")).as("timestamp"),
+        col("flow_id"),
+        col("uid"),
+        lit(day.toString).cast(DateType).as("export_date"))
+
+  /** A rewritten row whose flow_id the update frame holds. */
+  private val matched: Column = col("u_flow_id").isNotNull
+
   /** Per-tier after-day cascade. `typed` is the day's typed staging. */
   private def afterDayTier(
       spark: SparkSession,
@@ -115,16 +131,12 @@ final class FlowPipeline(
       day: LocalDate,
       typed: DataFrame,
       maxDay: LocalDate): Unit = {
-    val metaT = metadataTable(tier)
-    val expT = experimentsTable(tier)
-
-    // 1/2: clear+insert day-d metadata
-    metaT.clearDay(spark, day)
-    metaT.writeDays(metadataInsert(typed, tier, day))
+    val sampled = typed.filter(col("cohort") < tier.percent)
 
     // The update window (I2): day d in its mid-cascade state — begin
     // rows deleted, continued/experiment still present — union the
-    // already-absorbed day d+1 partition from disk.
+    // already-absorbed day d+1 partition from disk. Read once, by the
+    // aggregate, so not cached.
     val dayState = importer
       .tierSlice(typed, tier, day, maxDay)
       .filter(col("type") =!= "flow.begin")
@@ -135,113 +147,43 @@ final class FlowPipeline(
           importer.table(tier).read(spark)
             .filter(col("day") === lit(next.toString).cast("date")))
       else dayState
-    val w = window.cache()
 
-    // 4: fold — MAX(flow_time), MAX(locale), MAX(uid) per flow (E2; MAX
-    // over VARCHAR = "any non-blank wins" since ''/NULL sort low).
-    // localCheckpoint: the fold is read THREE times (the upd chain, the
-    // experiments update's emptiness probe, its join) — one day-sized
-    // materialization beats three aggregations of the window.
-    val fold = w.groupBy("flow_id").agg(
+    // 4/5/6/8: MAX(flow_time|locale|uid) per flow (E2; MAX over VARCHAR
+    // = "any non-blank wins" since ''/NULL sort low), the C3 flags, and
+    // the continued type — only day d still has those rows (F3/B6).
+    val fold = window.groupBy("flow_id").agg(
       max("flow_time").as("upd_flow_time"),
       max("locale").as("upd_locale"),
-      max("uid").as("upd_uid"))
+      max("uid").as("upd_uid"),
+      max(when(col("type") === "flow.complete", true)).as("completed_m"),
+      max(when(col("type") === "account.created", true)).as("created_m"),
+      max(when(col("type").like("flow.continued.%"), col("type"))).as("cont_type"))
+      .withColumn("cont_m", col("cont_type").isNotNull)
       .withColumn("fold_m", lit(true))
-      .localCheckpoint()
-    // 5/6: completed / new_account flag sets (C3)
-    val completedIds = w.filter(col("type") === "flow.complete")
-      .select("flow_id").distinct().withColumn("completed_m", lit(true))
-    val createdIds = w.filter(col("type") === "account.created")
-      .select("flow_id").distinct().withColumn("created_m", lit(true))
-    // 8: continued_from source rows — only day d still has them (F3/B6)
-    val continued = w.filter(col("type").like("flow.continued.%"))
-      .groupBy("flow_id").agg(max("type").as("cont_type"))
-      .withColumn("cont_m", lit(true))
     // 7: metrics-context backfill build side — from STAGING (sampled,
-    // no day filter), gated on the historical cutoff (`:344-352`)
-    val mcx =
-      if (day.isBefore(historicalCutoff))
-        Some(typed.filter(col("cohort") < tier.percent)
-          .groupBy("flow_id")
+    // no day filter), gated on the historical cutoff (`:344-352`).
+    // localCheckpoint: both rewrites below join the aggregate.
+    val upd = (
+      if (!day.isBefore(historicalCutoff)) fold
+      else fold.join(
+        sampled.groupBy("flow_id")
           .agg(max(backfillCols.head).as(s"mcx_${backfillCols.head}"),
             backfillCols.tail.map(c => max(c).as(s"mcx_$c")): _*)
-          .withColumn("mcx_m", lit(true)))
-      else None
+          .withColumn("mcx_m", lit(true)),
+        Seq("flow_id"), "full_outer")
+    ).localCheckpoint()
 
-    // one combined update frame, one metadata rewrite. localCheckpoint:
-    // applyMetadataUpdates probes emptiness and then joins — without
-    // the checkpoint each of those re-evaluates the 5-way full-outer
-    // chain (measured: the q41 profile's isEmpty line was 47 s of the
-    // 30-day cascade before this).
-    val upd = Seq(Some(fold), Some(completedIds), Some(createdIds),
-      Some(continued), mcx).flatten
-      .reduce(_.join(_, Seq("flow_id"), "full_outer"))
-      .localCheckpoint()
-    applyMetadataUpdates(spark, metaT, upd, day)
-
-    // 10/11: experiments clear+insert (SPLIT_PART name/cohort — F4)
-    expT.clearDay(spark, day)
-    expT.writeDays(
-      typed
-        .filter(col("cohort") < tier.percent)
-        .filter(col("type").like("flow.experiment.%"))
-        .select(
-          splitPart(col("type"), ".", 3).as("experiment"),
-          splitPart(col("type"), ".", 4).as("cohort"),
-          epochSecondsToTs(col("timestamp")).as("timestamp"),
-          col("flow_id"),
-          col("uid"),
-          lit(day.toString).cast(DateType).as("export_date")))
-    // 12: experiments uid update from the window fold
-    applyExperimentsUpdate(spark, expT, fold, day)
-    w.unpersist(): Unit
-  }
-
-  private def horizonFilter(day: LocalDate): Column =
-    updateHorizon match {
-      case Some(h) =>
-        col("export_date") >= lit(day.minusDays(h.toLong).toString).cast(DateType)
-      case None => lit(true)
-    }
-
-  /** Join the combined update frame and rewrite ONLY the partitions
-    * that contain matched flows. UPDATE-on-match semantics: a column is
-    * overwritten only when its source subquery matched (left join +
-    * per-column `when`), matching Redshift UPDATE ... FROM. */
-  private def applyMetadataUpdates(
-      spark: SparkSession,
-      metaT: DayPartitionedTable,
-      upd: DataFrame,
-      day: LocalDate): Unit = {
-    if (metaT.days(spark).isEmpty || upd.isEmpty) return
-    val meta = metaT.read(spark).filter(horizonFilter(day))
-    // No broadcast() hint: `upd` is one row per flow of one day —
-    // bounded by day volume, but at 100 TB/day that is far past
-    // broadcast range, and a literal hint overrides AQE's size check.
-    // AQE broadcasts it while small, shuffle-joins when not.
-    val u = upd.withColumnRenamed("flow_id", "u_flow_id")
-    // localCheckpoint, not cache: writeDays below dynamically overwrites
-    // the very partitions this frame reads. A cached plan keeps its full
-    // lineage, so losing a block mid-write would recompute from the
-    // half-overwritten table; checkpointing severs the lineage before
-    // the first overwritten byte.
-    val joined = meta.join(u, meta("flow_id") === u("u_flow_id"), "left")
-      .localCheckpoint()
+    // 1/2 + 4-9: UPDATE-on-match semantics — a column is overwritten
+    // only when its source subquery matched (left join + per-column
+    // `when`), matching Redshift UPDATE ... FROM.
     def m(c: String): Column = coalesce(col(c), lit(false))
-    val anyMatch = m("fold_m") || m("completed_m") || m("created_m") ||
-      m("cont_m") || (if (joined.columns.contains("mcx_m")) m("mcx_m") else lit(false))
-    val affected = joined.filter(anyMatch)
-      .select(col("export_date").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (affected.nonEmpty) {
-      val backfilled = backfillCols.foldLeft(joined) { (df, c) =>
-        if (df.columns.contains(s"mcx_$c"))
-          df.withColumn(c,
-            when(m("mcx_m") && col(c) === "", emptyBackfill(col(c), col(s"mcx_$c")))
-              .otherwise(col(c))) // B8: fill only blank fields
-        else df
+    val meta = rewrite(spark, metadataTable(tier), day,
+        metadataInsert(sampled, day), upd) { j =>
+      backfillCols.filter(c => j.columns.contains(s"mcx_$c")).foldLeft(j) { (df, c) =>
+        df.withColumn(c,
+          when(m("mcx_m") && col(c) === "", emptyBackfill(col(c), col(s"mcx_$c")))
+            .otherwise(col(c))) // B8: fill only blank fields
       }
-      val updated = backfilled
         .withColumn("duration",
           when(m("fold_m"), col("upd_flow_time")).otherwise(col("duration")))
         .withColumn("locale",
@@ -253,43 +195,71 @@ final class FlowPipeline(
         .withColumn("continued_from",
           when(m("cont_m"), continuedFrom(col("cont_type")))
             .otherwise(col("continued_from")))
-      val outCols = meta.columns.toIndexedSeq.map(col)
-      metaT.writeDays(
-        updated
-          .filter(col("export_date").cast("string").isin(affected: _*))
-          .select(outCols: _*))
     }
+
+    // 10/11 + 12: experiments insert + uid update from the aggregate
+    val exp = rewrite(spark, experimentsTable(tier), day,
+        experimentsInsert(sampled, day),
+        upd.filter(col("fold_m")).select("flow_id", "upd_uid")) {
+      _.withColumn("uid", when(matched, col("upd_uid")).otherwise(col("uid")))
+    }
+
+    // Released only now, after the tier-day's last write has finished:
+    // a local checkpoint's blocks cannot be recomputed.
+    Seq(upd, meta, exp).foreach(release)
   }
 
-  /** Step 12 — Q_UPDATE_EXPERIMENTS (`:287-298`). */
-  private def applyExperimentsUpdate(
+  private def horizonFilter(day: LocalDate): Column =
+    updateHorizon match {
+      case Some(h) =>
+        col("export_date") >= lit(day.minusDays(h.toLong).toString).cast(DateType)
+      case None => lit(true)
+    }
+
+  /** Clear day d (so a zero-row rebuild still clears), then rewrite the
+    * table's rows in the update horizon plus day d's `insert` rows,
+    * left-joined to `upd` on flow_id and mapped through `update`. Writes
+    * only the partitions holding a matched row, plus day d. Returns
+    * the checkpointed joined frame, to be released by the caller. */
+  private def rewrite(
       spark: SparkSession,
-      expT: DayPartitionedTable,
-      fold: DataFrame,
-      day: LocalDate): Unit = {
-    if (expT.days(spark).isEmpty || fold.isEmpty) return
-    val exp = expT.read(spark).filter(horizonFilter(day))
-    // un-hinted for the same per-day-volume reason as applyMetadataUpdates
-    val u = fold
-      .select(col("flow_id").as("u_flow_id"), col("upd_uid"), col("fold_m"))
-    // localCheckpoint for the same read-then-overwrite reason as
-    // applyMetadataUpdates
-    val joined = exp.join(u, exp("flow_id") === u("u_flow_id"), "left")
+      t: DayPartitionedTable,
+      day: LocalDate,
+      insert: DataFrame,
+      upd: DataFrame)(
+      update: DataFrame => DataFrame): DataFrame = {
+    t.clearDay(spark, day)
+    val rows =
+      if (t.days(spark).isEmpty) insert
+      else t.read(spark).filter(horizonFilter(day)).unionByName(insert)
+    // localCheckpoint, not cache: writeDays below dynamically overwrites
+    // the very partitions this frame reads. A cached plan keeps its full
+    // lineage, so losing a block mid-write would recompute from the
+    // half-overwritten table; checkpointing severs the lineage before
+    // the first overwritten byte.
+    // No broadcast() hint: `upd` is one row per flow of one day —
+    // bounded by day volume, but at 100 TB/day that is far past
+    // broadcast range, and a literal hint overrides AQE's size check.
+    val u = upd.withColumnRenamed("flow_id", "u_flow_id")
+    val joined = rows.join(u, col("flow_id") === col("u_flow_id"), "left")
       .localCheckpoint()
-    val affected = joined.filter(coalesce(col("fold_m"), lit(false)))
+    val days = day.toString +: joined.filter(matched)
       .select(col("export_date").cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq
-    if (affected.nonEmpty) {
-      val updated = joined.withColumn("uid",
-        when(coalesce(col("fold_m"), lit(false)), col("upd_uid"))
-          .otherwise(col("uid")))
-      val outCols = exp.columns.toIndexedSeq.map(col)
-      expT.writeDays(
-        updated
-          .filter(col("export_date").cast("string").isin(affected: _*))
-          .select(outCols: _*))
-    }
+    t.writeDays(
+      update(joined)
+        .filter(col("export_date").cast("string").isin(days: _*))
+        .select(rows.columns.toIndexedSeq.map(col): _*))
+    joined
   }
+
+  /** Drop a local checkpoint's blocks. `Dataset.unpersist` only reaches
+    * the cache manager; the blocks belong to the RDD under the plan. */
+  private def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+      case _ =>
+    }
 
   /** Full run: generic import (with absorption-filtered inserts) + the
     * per-day cascade + metadata/experiments expiry (`:379-386`). */
