@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.util.Json
+
 /** Write SparkEntry.oracleSql as oracle_sql.json WITHOUT running any
   * query — lets the DuckDB compare be iterated against an existing
   * Verify output dir after oracle-only edits (e.g. CTE MATERIALIZED
@@ -10,17 +12,8 @@ object DumpOracles {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     new java.io.File(outDir).mkdirs()
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     println(s"[dump] ${SparkEntry.oracleSql.size} oracle entries written")
   }

@@ -814,7 +814,7 @@ private[graft] trait EntryMaintenanceStreamDefs extends EntryCurationTextDefs {
     * driver, not just its parts (q127/q128/q141/q133/q144 gate the
     * parts; this gates their orchestration). */
   private[graft] def nightlyTickQuery(s: SparkSession, dir: String): DataFrame = {
-    import graft.jobs.{CardMaintenance, RunNightly}
+    import graft.jobs.{CardMaintenance, IndexMaintenance, RunNightly, TokenizerMaintenance}
     // dir-tagged state path: concurrent runs must not share (ADVICE r9)
     val stateDir =
       s"target/q157_nightly_state_${java.lang.Integer.toHexString(dir.hashCode)}"
@@ -835,10 +835,9 @@ private[graft] trait EntryMaintenanceStreamDefs extends EntryCurationTextDefs {
         lit(null).cast("string").as(s"c${i + 1}"))
       df.select((lit(rel).as("rel") +: (cs ++ nulls)): _*)
     }
-    val band = pad(s.read.parquet(s"$stateDir/index/band_index"),
-      "band", col("id"), col("band"), col("key"))
-    val hash = pad(s.read.parquet(s"$stateDir/index/hash_index"),
-      "hash", col("h"), col("cnt"))
+    val index = IndexMaintenance.load(s, s"$stateDir/index").get
+    val band = pad(index.bandIndex, "band", col("id"), col("band"), col("key"))
+    val hash = pad(index.hashIndex, "hash", col("h"), col("cnt"))
     val card = pad(
       CardMaintenance.card(CardMaintenance.load(s, s"$stateDir/card").get),
       "card", col("lang"), col("n_docs"), col("n_exact_dups"),
@@ -851,8 +850,7 @@ private[graft] trait EntryMaintenanceStreamDefs extends EntryCurationTextDefs {
     val cov = pad(s.read.parquet(s"$stateDir/cov"),
       "cov", col("d1"), col("d2"), col("n"), col("s1"), col("s2"), col("s12"))
     val tok = pad(
-      graft.jobs.TokenizerMaintenance.card(
-        graft.jobs.TokenizerMaintenance.load(s, s"$stateDir/tokenizer").get),
+      TokenizerMaintenance.card(TokenizerMaintenance.load(s, s"$stateDir/tokenizer").get),
       "tok", col("lang"), col("n_docs"), col("n_chars"),
       col("n_ws_tokens"), col("n_tokens"), col("chars_per_token_ppm"),
       col("fertility_ppm"))

@@ -56,8 +56,7 @@ object GuardRehearse {
         }
         println(f"""{"mode":"simhash-guard","label":"$label","n_docs":$n,""" +
           f""""fired":${fired.nonEmpty},"sec":$gSec%.3f,""" +
-          s""""msg":${fired.map(m => "\"" + m.replace("\"", "'") + "\"")
-            .getOrElse("null")}}""")
+          s""""msg":${fired.map(graft.util.Json.str).getOrElse("null")}}""")
       case "edit" =>
         val c = spark.read.parquet(s"$dir/customer.parquet")
         val n = c.count()
@@ -73,8 +72,7 @@ object GuardRehearse {
         }
         println(f"""{"mode":"edit-guard","label":"$label","n_cust":$n,""" +
           f""""fired":${fired.nonEmpty},"sec":$gSec%.3f,""" +
-          s""""msg":${fired.map(m => "\"" + m.replace("\"", "'") + "\"")
-            .getOrElse("null")}}""")
+          s""""msg":${fired.map(graft.util.Json.str).getOrElse("null")}}""")
         val (pairs, rSec) = time {
           TextDedup.editDistanceJoin(left, right, "id", "name",
             variantDfCap = 48).count()

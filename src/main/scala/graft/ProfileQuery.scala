@@ -15,11 +15,6 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val (sfDir, name) = (args(0), args(1))
     val spark = GraftSession.forMain("graft-profile")
-    // A/B the Verify stateful-phase tuning (tiny-slice orchestration)
-    if (sys.env.get("SPARK_GRAFT_PROFILE_TUNED").contains("1")) {
-      spark.conf.set("spark.sql.shuffle.partitions", "2")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    }
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger

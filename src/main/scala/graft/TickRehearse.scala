@@ -17,14 +17,11 @@ import org.apache.spark.sql.functions._
   * Modes:
   *  - `tok`      — [[graft.jobs.TokenizerMaintenance]] rebuild + tick
   *  - `unigram`  — [[graft.jobs.UnigramMaintenance]] rebuild + tick
-  *  - `nightly4` — [[graft.jobs.RunNightly.tick]] with maxStep = 4
-  *                 (the tokenizer-less CONTROL)
-  *  - `nightly5` — the full 5-step tick; (nightly5 − nightly4) on the
-  *                 same fixture IS step 5's marginal cost
-  * Nightly modes read `embeddings.parquet` beside the docs table.
+  *  - `nightly`  — one full [[graft.jobs.RunNightly.tick]]; reads
+  *                 `embeddings.parquet` beside the docs table
   *
   * Usage: `TickRehearse <mode> <dir> [<label>]` where <dir> holds
-  * `documents.parquet` (+ `embeddings.parquet` for nightly modes).
+  * `documents.parquet` (+ `embeddings.parquet` for `nightly`).
   * Prints one JSON line: mode, label, n_docs, bootstrap_sec/tick_sec
   * (tok/unigram) or tick_sec (nightly: bootstrap+tick inside one call
   * against a fresh state dir, matching what q157 measures). */
@@ -77,7 +74,7 @@ object TickRehearse {
         }
         f"""{"mode":"unigram","label":"$label","n_docs":$nDocs,""" +
           f""""bootstrap_sec":$boot%.3f,"tick_sec":$tick%.3f}"""
-      case m @ ("nightly4" | "nightly5") =>
+      case "nightly" =>
         val e = spark.read.parquet(s"$dir/embeddings.parquet")
         val oldVecs = e.filter(col("vec_id") % 10 =!= 3)
           .select(col("vec_id"), col("embedding"))
@@ -85,12 +82,10 @@ object TickRehearse {
           .select(col("vec_id"),
             when(col("vec_id") % 10 === 5, transform(col("embedding"), x => -x))
               .otherwise(col("embedding")).as("embedding"))
-        val steps = if (m == "nightly5") 5 else 4
         val (_, tick) = time {
-          graft.jobs.RunNightly.tick(spark, stateDir, o, n, oldVecs, newVecs,
-            maxStep = steps)
+          graft.jobs.RunNightly.tick(spark, stateDir, o, n, oldVecs, newVecs)
         }
-        f"""{"mode":"$m","label":"$label","n_docs":$nDocs,""" +
+        f"""{"mode":"nightly","label":"$label","n_docs":$nDocs,""" +
           f""""tick_sec":$tick%.3f}"""
       case other => sys.error(s"unknown mode: $other")
     }

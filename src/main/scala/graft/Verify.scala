@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import graft.util.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -47,19 +49,6 @@ object Verify {
     "q21_minhash_lsh_pairs", "q32_minhash_char_shingles",
     "q22_simhash_pairs")
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     // optional 3rd arg: comma-separated query-name filter (local iteration;
@@ -73,7 +62,7 @@ object Verify {
     // 1. The compare inputs land BEFORE any query runs.
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // 2. One cached copy of each fixture table for all queries.
@@ -114,9 +103,9 @@ object Verify {
       val ms = (System.nanoTime() - q0) / 1000000
       val line = res match {
         case Right(rows) =>
-          s"""{"q":${jq(name)},"rows":$rows,"ms":$ms,"err":null}\n"""
+          s"""{"q":${Json.str(name)},"rows":$rows,"ms":$ms,"err":null}\n"""
         case Left(err) =>
-          s"""{"q":${jq(name)},"rows":null,"ms":$ms,"err":${jq(err)}}\n"""
+          s"""{"q":${Json.str(name)},"rows":null,"ms":$ms,"err":${Json.str(err)}}\n"""
       }
       statusLock.synchronized {
         Files.writeString(statusPath, line, StandardOpenOption.APPEND): Unit

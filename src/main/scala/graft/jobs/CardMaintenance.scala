@@ -146,32 +146,14 @@ object CardMaintenance {
   private val Parts = Seq("lang_sums", "text_index", "source_index", "word_index")
 
   def load(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Option[CardState] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (Parts.forall(p => graft.util.StateDirs.exists(conf, s"$stateDir/$p")))
-      Some(CardState(
-        spark.read.parquet(s"$stateDir/lang_sums"),
-        spark.read.parquet(s"$stateDir/text_index"),
-        spark.read.parquet(s"$stateDir/source_index"),
-        spark.read.parquet(s"$stateDir/word_index")))
-    else None
-  }
+      stateDir: String): Option[CardState] =
+    graft.util.StateDirs.load(spark, stateDir, Parts)
+      .map { case Seq(l, t, s, w) => CardState(l, t, s, w) }
 
-  /** Stage-then-promote save (the [[graft.util.StateDirs]] discipline):
-    * every part materializes under `<stateDir>.tmp` first — the
-    * previous state's files stay readable while the next state's plans
-    * still reference them — then ONE Hadoop-FS rename flips the whole
-    * directory, so a crash leaves the old state or the new, never a
-    * mix of parts; any Spark-writable scheme works, not just local. */
-  def save(state: CardState, stateDir: String): Unit = {
-    val parts = Parts.zip(Seq(
-      state.langSums, state.textIndex, state.sourceIndex, state.wordIndex))
-    parts.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$stateDir.tmp/$name")
-    }
-    graft.util.StateDirs.promote(
-      state.langSums.sparkSession.sparkContext.hadoopConfiguration, stateDir)
-  }
+  /** Persist through [[graft.util.StateDirs.save]]. */
+  def save(state: CardState, stateDir: String): Unit =
+    graft.util.StateDirs.save(stateDir, Parts.zip(Seq(
+      state.langSums, state.textIndex, state.sourceIndex, state.wordIndex)))
 
   /** CLI — `CardMaintenance <stateDir> <oldSnap> <newSnap> [idCol
     * textCol]`: bootstrap with a rebuild of the OLD snapshot when no

@@ -151,31 +151,14 @@ object IndexMaintenance {
 
   /** Load a persisted state (all three relations present) or None. */
   def load(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Option[IndexState] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (Parts.forall(p => graft.util.StateDirs.exists(conf, s"$stateDir/$p")))
-      Some(IndexState(
-        spark.read.parquet(s"$stateDir/band_index"),
-        spark.read.parquet(s"$stateDir/hash_index"),
-        spark.read.parquet(s"$stateDir/bloom_shards")))
-    else None
-  }
+      stateDir: String): Option[IndexState] =
+    graft.util.StateDirs.load(spark, stateDir, Parts)
+      .map { case Seq(b, h, s) => IndexState(b, h, s) }
 
-  /** Stage-then-promote save: ALL three relations materialize under
-    * `<stateDir>.tmp` FIRST — the next state's plans read the previous
-    * state's files, so nothing may move until every staged write has
-    * finished — then ONE Hadoop-FS rename flips the whole directory
-    * (the [[graft.util.StateDirs]] discipline: a crashed tick leaves
-    * the previous state fully readable, never a mix of parts, on any
-    * Spark-writable scheme). */
-  def save(state: IndexState, stateDir: String): Unit = {
-    val parts = Parts.zip(Seq(state.bandIndex, state.hashIndex, state.bloomShards))
-    parts.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$stateDir.tmp/$name")
-    }
-    graft.util.StateDirs.promote(
-      state.bandIndex.sparkSession.sparkContext.hadoopConfiguration, stateDir)
-  }
+  /** Persist through [[graft.util.StateDirs.save]]. */
+  def save(state: IndexState, stateDir: String): Unit =
+    graft.util.StateDirs.save(stateDir,
+      Parts.zip(Seq(state.bandIndex, state.hashIndex, state.bloomShards)))
 
   /** CLI — the nightly job the way [[RunImport]] wires the reference
     * pipelines: `IndexMaintenance <stateDir> <oldSnap.parquet>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.util.StateDirs
 
 /** The composed nightly refresh — ONE driver that brings every piece
   * of persistent derived state current against the latest corpus
@@ -43,38 +44,31 @@ object RunNightly {
       centroids: Seq[(Long, Array[Float])],
       scales: Array[Double])
 
-  def loadModel(spark: SparkSession, dir: String): Option[VecModel] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (!graft.util.StateDirs.exists(conf, s"$dir/centroids") ||
-        !graft.util.StateDirs.exists(conf, s"$dir/scales")) return None
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cell"), col("d"), col("c")).collect()
-      .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      .map { case (cell, rows) =>
-        cell -> rows.sortBy(_.getLong(1))
-          .map(r => (r.getLong(2).toDouble / 1e6 - 1.0).toFloat).toArray
-      }
-    val scales = spark.read.parquet(s"$dir/scales")
-      .select(col("i"), col("s")).collect()
-      .sortBy(_.getInt(0)).map(_.getDouble(1))
-    Some(VecModel(cents, scales))
-  }
+  private val ModelParts = Seq("centroids", "scales")
+
+  def loadModel(spark: SparkSession, dir: String): Option[VecModel] =
+    StateDirs.load(spark, dir, ModelParts).map { case Seq(c, s) =>
+      val cents = c.select(col("cell"), col("d"), col("c")).collect()
+        .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+        .map { case (cell, rows) =>
+          cell -> rows.sortBy(_.getLong(1))
+            .map(r => (r.getLong(2).toDouble / 1e6 - 1.0).toFloat).toArray
+        }
+      val scales = s.select(col("i"), col("s")).collect()
+        .sortBy(_.getInt(0)).map(_.getDouble(1))
+      VecModel(cents, scales)
+    }
 
   def saveModel(spark: SparkSession, dir: String,
       fit: DataFrame, scales: Array[Double]): Unit = {
     import spark.implicits._
-    fit.select(col("cell"), col("d"), col("c"))
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    scales.toSeq.zipWithIndex.map { case (s, i) => (i, s) }.toDF("i", "s")
-      .write.mode("overwrite").parquet(s"$dir/scales")
+    StateDirs.save(dir, ModelParts.zip(Seq(
+      fit.select(col("cell"), col("d"), col("c")),
+      scales.toSeq.zipWithIndex.map { case (s, i) => (i, s) }.toDF("i", "s"))))
   }
 
   /** One full nightly tick over a persisted state dir. Returns the
     * summary line printed by main (counts per maintained relation).
-    * `maxStep` (default 5 = all) exists for MEASUREMENT, not
-    * operation: `maxStep = 4` is the control that isolates step 5's
-    * (tokenizer) marginal cost in the round-12 BASELINE attribution
-    * — the composed gate's growth is measured, not assumed.
     *
     * The five families run concurrently; if one fails, the others
     * still run to completion, and `tick` throws the first failure only
@@ -88,10 +82,7 @@ object RunNightly {
       newVecs: DataFrame,
       k: Int = 8,
       iters: Int = 2,
-      dims: Int = 64,
-      maxStep: Int = 5): String = {
-    require(maxStep >= 4 && maxStep <= 5,
-      s"maxStep in [4,5] (4 = tokenizer-less control): $maxStep")
+      dims: Int = 64): String = {
     // (Round-16 note: bootstrap save-then-reload — materializing the
     // rebuilt state to parquet before the tick so the three nightly
     // writes read blocks instead of recomputing the rebuild lineage —
@@ -107,7 +98,6 @@ object RunNightly {
     // others' stragglers leave idle, under the session's FAIR
     // scheduler. Determinism is untouched — no family reads another's
     // output, and the summary below runs after the barrier.
-    val conf = spark.sparkContext.hadoopConfiguration
     val ov = oldVecs.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val nv = newVecs.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val postDir = s"$stateDir/vecindex"
@@ -138,43 +128,35 @@ object RunNightly {
           saveModel(spark, s"$stateDir/model", fit, scales)
           loadModel(spark, s"$stateDir/model").get
         }
-        val postings =
-          if (graft.util.StateDirs.exists(conf, postDir)) spark.read.parquet(postDir)
-          else Similarity.ivfSqIndexBuild(ov, "id", "vec",
-            model.centroids, model.scales)
-        val postNext = Similarity.ivfSqIndexMaintain(
-          postings, ov, nv, "id", "vec", model.centroids, model.scales)
-        postNext.write.mode("overwrite").parquet(s"$postDir.tmp")
-        graft.util.StateDirs.promote(conf, postDir)
+        val postings = StateDirs.load(spark, postDir).getOrElse(
+          Similarity.ivfSqIndexBuild(ov, "id", "vec", model.centroids, model.scales))
+        StateDirs.save(postDir, Similarity.ivfSqIndexMaintain(
+          postings, ov, nv, "id", "vec", model.centroids, model.scales))
       },
       // 4. covariance state (kilo-unit sufficient stats)
       () => {
-        val covState =
-          if (graft.util.StateDirs.exists(conf, covDir)) spark.read.parquet(covDir)
-          else Similarity.covarianceStats(
-            oldVecs.select(col("embedding")), "embedding", dims)
-        val covNext = Similarity.covarianceDelta(
-          covState, oldVecs, newVecs, "vec_id", "embedding", dims)
-        covNext.write.mode("overwrite").parquet(s"$covDir.tmp")
-        graft.util.StateDirs.promote(conf, covDir)
-      }) ++ (
+        val covState = StateDirs.load(spark, covDir).getOrElse(
+          Similarity.covarianceStats(oldVecs.select(col("embedding")), "embedding", dims))
+        StateDirs.save(covDir, Similarity.covarianceDelta(
+          covState, oldVecs, newVecs, "vec_id", "embedding", dims))
+      },
       // 5. tokenizer: merges bootstrap-TRAINED then PINNED (the
       // quantizer's persist/pin lifecycle — a scheduled retrain deletes
       // the state dir), fertility counters maintained at O(changed)
       // under the pinned table
-      if (maxStep < 5) Seq.empty
-      else Seq(() => {
+      () => {
         val tokState = TokenizerMaintenance.load(spark, s"$stateDir/tokenizer")
           .getOrElse(TokenizerMaintenance.rebuild(oldDocs, "doc_id", "text"))
         val tokNext = TokenizerMaintenance.nightly(
           tokState, oldDocs, newDocs, "doc_id", "text")
         TokenizerMaintenance.save(tokNext, s"$stateDir/tokenizer")
-      }): Seq[() => Unit])
+      })
     graft.util.Par.foreach(steps)(_.apply())
 
     // summary reads the SAVED state fresh from disk — the pre-save
     // DataFrames' plans still point at the replaced previous files
-    val card = CardMaintenance.card(CardMaintenance.load(spark, s"$stateDir/card").get)
+    val index = IndexMaintenance.load(spark, s"$stateDir/index").get
+    val tok = TokenizerMaintenance.load(spark, s"$stateDir/tokenizer").get
     // Guard surfacing (round-12 ask #6): a binding cap on tonight's
     // corpus is a REPORTED event. The audit reads the MAINTAINED band
     // index (one bands×N rollup, zero re-banding); its pairs_full is
@@ -182,8 +164,7 @@ object RunNightly {
     // estimate — conservative, so `binding=false` here certifies the
     // refined cascade too.
     val guard = graft.operators.TextDedup.capAuditOverBands(
-      spark.read.parquet(s"$stateDir/index/band_index"), degreeCap = 100)
-      .head()
+      index.bandIndex, degreeCap = 100).head()
     val gCapped = guard.getAs[Long]("n_capped_buckets")
     val gPairs = guard.getAs[Long]("pairs_full")
     val gBudget = graft.operators.TextDedup.DefaultLshPairBudget
@@ -193,29 +174,24 @@ object RunNightly {
     def cnt(tag: String, df: DataFrame): DataFrame =
       df.groupBy().agg(count(lit(1)).as("n"))
         .select(lit(tag).as("t"), col("n"))
-    val counted = (Seq(
-      "hashes" -> spark.read.parquet(s"$stateDir/index/hash_index"),
-      "bands" -> spark.read.parquet(s"$stateDir/index/band_index"),
-      "cardlangs" -> card,
+    val counted = Seq(
+      "hashes" -> index.hashIndex,
+      "bands" -> index.bandIndex,
+      "cardlangs" -> CardMaintenance.card(CardMaintenance.load(spark, s"$stateDir/card").get),
       "postings" -> spark.read.parquet(postDir),
-      "cov" -> spark.read.parquet(covDir)) ++
-      (if (maxStep < 5) Seq.empty
-       else Seq(
-         "merges" -> spark.read.parquet(s"$stateDir/tokenizer/merges"),
-         "langs" -> spark.read.parquet(s"$stateDir/tokenizer/fertility"))))
+      "cov" -> spark.read.parquet(covDir),
+      "merges" -> tok.merges,
+      "langs" -> tok.fertility)
       .map { case (t, df) => cnt(t, df) }
       .reduce(_.unionByName(_))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val tokPart =
-      if (maxStep < 5) ""
-      else s"tokenizer: merges=${counted("merges")} " +
-        s"langs=${counted("langs")} | "
     s"[nightly] index: hashes=${counted("hashes")} " +
       s"bands=${counted("bands")} | " +
       s"card: langs=${counted("cardlangs")} | " +
       s"vecindex: postings=${counted("postings")} | " +
       s"cov: pairs=${counted("cov")} | " +
-      tokPart +
+      s"tokenizer: merges=${counted("merges")} " +
+      s"langs=${counted("langs")} | " +
       s"guards: capped_buckets=$gCapped pairs_est=$gPairs " +
       s"budget=$gBudget binding=${gCapped > 0 || gPairs > gBudget}"
   }

@@ -154,24 +154,13 @@ object TokenizerMaintenance {
 
   private val Parts = Seq("merges", "fertility")
 
-  def load(spark: SparkSession, stateDir: String): Option[TokState] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (Parts.forall(p => graft.util.StateDirs.exists(conf, s"$stateDir/$p")))
-      Some(TokState(
-        spark.read.parquet(s"$stateDir/merges"),
-        spark.read.parquet(s"$stateDir/fertility")))
-    else None
-  }
+  def load(spark: SparkSession, stateDir: String): Option[TokState] =
+    graft.util.StateDirs.load(spark, stateDir, Parts)
+      .map { case Seq(m, f) => TokState(m, f) }
 
-  /** Stage-then-promote save (the [[graft.util.StateDirs]] contract:
-    * old state stays readable until one directory rename flips). */
-  def save(state: TokState, stateDir: String): Unit = {
-    Parts.zip(Seq(state.merges, state.fertility)).foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$stateDir.tmp/$name")
-    }
-    graft.util.StateDirs.promote(
-      state.merges.sparkSession.sparkContext.hadoopConfiguration, stateDir)
-  }
+  /** Persist through [[graft.util.StateDirs.save]]. */
+  def save(state: TokState, stateDir: String): Unit =
+    graft.util.StateDirs.save(stateDir, Parts.zip(Seq(state.merges, state.fertility)))
 
   /** CLI — `TokenizerMaintenance <stateDir> <oldSnap> <newSnap>`:
     * bootstrap-train on the old snapshot when no state exists, tick to

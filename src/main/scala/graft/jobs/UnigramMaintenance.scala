@@ -125,23 +125,13 @@ object UnigramMaintenance {
 
   private val Parts = Seq("pieces", "fertility")
 
-  def load(spark: SparkSession, stateDir: String): Option[UniState] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (Parts.forall(p => graft.util.StateDirs.exists(conf, s"$stateDir/$p")))
-      Some(UniState(
-        spark.read.parquet(s"$stateDir/pieces"),
-        spark.read.parquet(s"$stateDir/fertility")))
-    else None
-  }
+  def load(spark: SparkSession, stateDir: String): Option[UniState] =
+    graft.util.StateDirs.load(spark, stateDir, Parts)
+      .map { case Seq(p, f) => UniState(p, f) }
 
-  /** Stage-then-promote save (the [[graft.util.StateDirs]] contract). */
-  def save(state: UniState, stateDir: String): Unit = {
-    Parts.zip(Seq(state.pieces, state.fertility)).foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$stateDir.tmp/$name")
-    }
-    graft.util.StateDirs.promote(
-      state.pieces.sparkSession.sparkContext.hadoopConfiguration, stateDir)
-  }
+  /** Persist through [[graft.util.StateDirs.save]]. */
+  def save(state: UniState, stateDir: String): Unit =
+    graft.util.StateDirs.save(stateDir, Parts.zip(Seq(state.pieces, state.fertility)))
 
   /** CLI — `UnigramMaintenance <stateDir> <oldSnap> <newSnap>`:
     * bootstrap-train on the old snapshot when no state exists, tick to

@@ -39,15 +39,12 @@ final class EventImporter(
     val warehouse: String,
     val family: EventFamily,
     val tiers: Seq[SampleTier] = SampleTier.defaults,
-    val policy: CsvEventSource.FieldCountPolicy = CsvEventSource.Strict,
     val maxError: Int = 100,
-    val filesPerDay: Int = 1,
     val insertFilter: Option[org.apache.spark.sql.Column] = None,
     val format: LandingFormat = LandingFormat.Csv) {
 
   def table(tier: SampleTier): DayPartitionedTable =
-    new DayPartitionedTable(warehouse, family.tableName(tier.suffix),
-      sortCol = Some("ts"), filesPerDay = filesPerDay)
+    new DayPartitionedTable(warehouse, family.tableName(tier.suffix), sortCol = Some("ts"))
 
   def tableBySuffix(suffix: String): DayPartitionedTable =
     table(tiers.find(_.suffix == suffix).get)
@@ -140,8 +137,8 @@ final class EventImporter(
     if (unpopulated.isEmpty && extant.isEmpty) return Seq.empty // empty-safe
     val maxDay = (extant.toSeq ++ unpopulated.headOption.map(_._1)).max
     unpopulated.foreach { case (day, file) =>
-      val staging = format.readDay(
-        spark, file, family, policy, maxError)
+      val flagged = format.readDay(spark, file, family, maxError)
+      val staging = CsvEventSource.kept(flagged)
       // Staging sanity probe (import_events.py:129-131,188-192): the
       // reference prints the staged MIN/MAX timestamps per day before
       // loading — the operator guardrail against a mis-dated or
@@ -150,7 +147,7 @@ final class EventImporter(
       println(s"[graft-import] $prefix $day staged ${mm.get(0)}..${mm.get(1)} (epoch s)")
       importDay(spark, day, staging, maxDay)
       afterDay(spark, day, staging, maxDay)
-      staging.unpersist()
+      flagged.unpersist() // the persisted frame, not its filtered view
     }
     expire(spark, maxDay)
     unpopulated.map(_._1)

@@ -61,8 +61,8 @@ object CsvEventSource {
     * Single text-scan lineage: sanitize → field-count policy → split →
     * type → truncate. Error accounting forces one count job over the
     * cleaned lines (the COPY analog does the same work server-side);
-    * the returned frame is persisted because the three-tier import
-    * reads it once per tier.
+    * the frame under the result is persisted because the three-tier
+    * import reads it once per tier.
     */
   def readDay(
       spark: SparkSession,
@@ -70,7 +70,23 @@ object CsvEventSource {
       family: EventFamily,
       policy: FieldCountPolicy = Strict,
       maxError: Int = 100,
-      persist: Boolean = true): DataFrame = {
+      persist: Boolean = true): DataFrame =
+    kept(flaggedDay(spark, file, family, policy, maxError, persist))
+
+  /** The staging rows of a [[flaggedDay]] frame: its error rows dropped. */
+  def kept(flagged: DataFrame): DataFrame =
+    flagged.filter(!col("_error")).drop("_error")
+
+  /** [[readDay]] before [[kept]]: every typed line with its `_error`
+    * flag, past the MAXERROR gate — the frame that was persisted, so a
+    * caller that holds it can release exactly that cache. */
+  private[sources] def flaggedDay(
+      spark: SparkSession,
+      file: String,
+      family: EventFamily,
+      policy: FieldCountPolicy,
+      maxError: Int,
+      persist: Boolean): DataFrame = {
     val n = 1 + family.columns.size // timestamp + declared columns
     val raw = spark.read.text(file)
     val clean = raw.filter(!blocklisted(col("value"))) // A6
@@ -106,14 +122,20 @@ object CsvEventSource {
       col("timestamp").isNull || size(col("f")) =!= n) { (acc, c) =>
       if (c.dataType == LongType && c.notNull) acc || col(c.name).isNull else acc
     }
-    val flagged = parsed.withColumn("_error", isError).drop("f")
+    gate(parsed.withColumn("_error", isError).drop("f"), maxError, persist)
+  }
+
+  /** Persist `flagged` (when asked) and count its error rows: over
+    * `maxError`, release it and throw [[MaxErrorExceeded]]. */
+  private[sources] def gate(
+      flagged: DataFrame, maxError: Int, persist: Boolean): DataFrame = {
     if (persist) flagged.persist(StorageLevel.MEMORY_AND_DISK)
     val errors = flagged.filter(col("_error")).count() // MAXERROR gate
     if (errors > maxError) {
       flagged.unpersist()
       throw new MaxErrorExceeded(errors, maxError)
     }
-    flagged.filter(!col("_error")).drop("_error")
+    flagged
   }
 
   /** A2 — enumerate day files under a landing dir: `{prefix}-YYYY-MM-DD

@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.model.EventFamily
 
@@ -44,7 +43,17 @@ object JsonEventSource {
       file: String,
       family: EventFamily,
       maxError: Int = 100,
-      persist: Boolean = true): DataFrame = {
+      persist: Boolean = true): DataFrame =
+    CsvEventSource.kept(flaggedDay(spark, file, family, maxError, persist))
+
+  /** [[readDay]] before [[CsvEventSource.kept]], as
+    * [[CsvEventSource.flaggedDay]]. */
+  private[sources] def flaggedDay(
+      spark: SparkSession,
+      file: String,
+      family: EventFamily,
+      maxError: Int,
+      persist: Boolean): DataFrame = {
     // Parse everything as STRING first, then apply the shared typing
     // rules — identical error semantics to the CSV path (a JSON number
     // token coerces to its string form, so 123 and "123" both type).
@@ -82,13 +91,7 @@ object JsonEventSource {
           if (c.dataType == LongType && c.notNull) acc || col(c.name).isNull else acc
         })
       .drop("_corrupt")
-    if (persist) flagged.persist(StorageLevel.MEMORY_AND_DISK)
-    val errors = flagged.filter(col("_error")).count() // MAXERROR gate
-    if (errors > maxError) {
-      flagged.unpersist()
-      throw new CsvEventSource.MaxErrorExceeded(errors, maxError)
-    }
-    flagged.filter(!col("_error")).drop("_error")
+    CsvEventSource.gate(flagged, maxError, persist)
   }
 
   /** A2 — day discovery, shared listing logic, `.json` extension. */

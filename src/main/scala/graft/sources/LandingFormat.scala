@@ -21,38 +21,36 @@ import graft.model.EventFamily
 sealed trait LandingFormat {
   def listDays(
       spark: SparkSession, dir: String, prefix: String): Seq[(LocalDate, String)]
+  /** One day file as its persisted `_error`-flagged frame past the
+    * MAXERROR gate; [[CsvEventSource.kept]] of it is the staging frame,
+    * and the caller unpersists it when the day is done. */
   def readDay(
-      spark: SparkSession,
-      file: String,
-      family: EventFamily,
-      policy: CsvEventSource.FieldCountPolicy,
-      maxError: Int): DataFrame
+      spark: SparkSession, file: String, family: EventFamily, maxError: Int): DataFrame
 }
 
 object LandingFormat {
 
-  /** A1 CSV: blocklist sanitizer (A6) + field-count policy (A7) apply. */
+  /** A1 CSV: blocklist sanitizer (A6) + the `Strict` field-count
+    * policy (A7, clean-flow-data.sh:48) apply. */
   case object Csv extends LandingFormat {
     override def listDays(
         spark: SparkSession, dir: String, prefix: String): Seq[(LocalDate, String)] =
       CsvEventSource.listDays(spark, dir, prefix)
     override def readDay(
-        spark: SparkSession, file: String, family: EventFamily,
-        policy: CsvEventSource.FieldCountPolicy, maxError: Int): DataFrame =
-      CsvEventSource.readDay(spark, file, family, policy, maxError)
+        spark: SparkSession, file: String, family: EventFamily, maxError: Int): DataFrame =
+      CsvEventSource.flaggedDay(
+        spark, file, family, CsvEventSource.Strict, maxError, persist = true)
   }
 
-  /** JSON-lines: self-describing, so the CSV-era field-count policy is
-    * accepted-and-ignored (extra keys drop, missing keys land as '' —
-    * the policy argument has no meaningful analog). */
+  /** JSON-lines: self-describing, so there is no field-count policy
+    * (extra keys drop, missing keys land as ''). */
   case object Json extends LandingFormat {
     override def listDays(
         spark: SparkSession, dir: String, prefix: String): Seq[(LocalDate, String)] =
       JsonEventSource.listDays(spark, dir, prefix)
     override def readDay(
-        spark: SparkSession, file: String, family: EventFamily,
-        policy: CsvEventSource.FieldCountPolicy, maxError: Int): DataFrame =
-      JsonEventSource.readDay(spark, file, family, maxError)
+        spark: SparkSession, file: String, family: EventFamily, maxError: Int): DataFrame =
+      JsonEventSource.flaggedDay(spark, file, family, maxError, persist = true)
   }
 
   /** Parse a CLI/config name. */

@@ -2,31 +2,63 @@ package graft.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Persisted-state directory staging/promotion through the Hadoop
-  * FileSystem API — valid on any Spark-writable scheme (local, HDFS,
-  * S3A), not just `java.io.File` paths, which is what the nightly
-  * jobs' state dirs actually are on a cluster.
+/** The persisted-state protocol of every nightly state dir, through
+  * the Hadoop FileSystem API — valid on any Spark-writable scheme
+  * (local, HDFS, S3A), not just `java.io.File` paths, which is what
+  * the nightly jobs' state dirs actually are on a cluster.
   *
-  * Discipline: the writer materializes EVERYTHING under `<dir>.tmp`
-  * first (the previous state stays readable throughout — maintenance
-  * plans read the previous files), then [[promote]] flips via two
-  * whole-directory renames: `<dir>` → `<dir>.old`, then `<dir>.tmp`
+  * A state dir holds one parquet relation, or named parts each in its
+  * own subdirectory. [[save]] materializes EVERYTHING under `<dir>.tmp`
+  * first (the previous state stays readable throughout — the next
+  * state's plans read the previous files), then [[promote]] flips via
+  * two whole-directory renames: `<dir>` → `<dir>.old`, then `<dir>.tmp`
   * → `<dir>`, then reap `.old`. Each rename is atomic on HDFS and
   * local (S3A's rename is a copy, but each flip point is still
   * single), and the previous state is never deleted before the new
-  * one is live — a crash at ANY point leaves the old state intact
-  * (in `<dir>` or `<dir>.old`) plus possibly the complete staged
+  * one is live — a crash or failed write at ANY point leaves the old
+  * state intact (in `<dir>` or `<dir>.old`) plus possibly a staged
   * copy in `<dir>.tmp`; re-running the producing job (which re-stages
   * and calls promote again) always converges. No file-by-file walk,
-  * so no window where a reader sees a mix of parts. */
+  * so no window where a reader sees a mix of parts. [[load]] reads a
+  * state only when every part is present. */
 object StateDirs {
 
   /** Scheme-aware existence probe (java.io.File.exists is local-only). */
-  def exists(conf: Configuration, path: String): Boolean = {
+  private def exists(conf: Configuration, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(conf).exists(p)
   }
+
+  /** Stage each named part under `<dir>.tmp/<name>`, then [[promote]]. */
+  def save(dir: String, parts: Seq[(String, DataFrame)]): Unit = {
+    parts.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$dir.tmp/$name")
+    }
+    promote(parts.head._2.sparkSession.sparkContext.hadoopConfiguration, dir)
+  }
+
+  /** One-relation state: stage `df` as `<dir>.tmp`, then [[promote]]. */
+  def save(dir: String, df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(s"$dir.tmp")
+    promote(df.sparkSession.sparkContext.hadoopConfiguration, dir)
+  }
+
+  /** The named parts in order, or None unless every one exists. */
+  def load(spark: SparkSession, dir: String,
+      names: Seq[String]): Option[Seq[DataFrame]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (names.forall(n => exists(conf, s"$dir/$n")))
+      Some(names.map(n => spark.read.parquet(s"$dir/$n")))
+    else None
+  }
+
+  /** One-relation state, or None when `dir` does not exist. */
+  def load(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (exists(spark.sparkContext.hadoopConfiguration, dir))
+      Some(spark.read.parquet(dir))
+    else None
 
   /** Promote `<dir>.tmp` to `<dir>` without ever destroying the last
     * live state before the new one is in place: park the destination

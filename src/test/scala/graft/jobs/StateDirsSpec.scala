@@ -2,14 +2,18 @@ package graft.jobs
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
-import graft.util.StateDirs
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+import graft.util.{StateDirs, TmpDirs}
 
 /** Crash-safety contract of the staged-directory promotion: the last
   * live state must survive EVERY crash window — promote may never
-  * delete the old state before the new one is in place. */
+  * delete the old state before the new one is in place — plus the
+  * save/load pair every nightly state dir goes through. */
 class StateDirsSpec extends SparkSpec {
+  import spark.implicits._
 
   private def conf = new Configuration()
 
@@ -61,5 +65,72 @@ class StateDirsSpec extends SparkSpec {
     mkState(dir + ".tmp", "v1")
     StateDirs.promote(conf, dir)
     readState(dir) shouldBe "v1"
+  }
+
+  private def freshDir(): String =
+    s"${Files.createTempDirectory("statedirs")}/state"
+
+  private def longs(dir: String, names: Seq[String]): Seq[Seq[Long]] =
+    StateDirs.load(spark, dir, names).get.map(_.as[Long].collect().toSeq.sorted)
+
+  test("load returns None unless every part exists") {
+    val dir = freshDir()
+    StateDirs.load(spark, dir, Seq("a", "b")) shouldBe None
+    StateDirs.save(dir, Seq("a" -> Seq(1L).toDF("v"), "b" -> Seq(2L, 3L).toDF("v")))
+    longs(dir, Seq("a", "b")) shouldBe Seq(Seq(1L), Seq(2L, 3L))
+    StateDirs.load(spark, dir, Seq("a", "b", "c")) shouldBe None
+    TmpDirs.deleteRecursively(s"$dir/b")
+    StateDirs.load(spark, dir, Seq("a", "b")) shouldBe None
+  }
+
+  test("a save whose second part fails leaves the previous state; the next save converges") {
+    val dir = freshDir()
+    val names = Seq("a", "b")
+    StateDirs.save(dir, names.map(_ -> Seq(1L).toDF("v")))
+    val failing = Seq(2L).toDF("v")
+      .select(when($"v" > 0, raise_error(lit("write fails"))).cast("long").as("v"))
+    an[Exception] should be thrownBy
+      StateDirs.save(dir, Seq("a" -> Seq(2L).toDF("v"), "b" -> failing))
+    longs(dir, names) shouldBe Seq(Seq(1L), Seq(1L))
+    StateDirs.save(dir, names.map(_ -> Seq(3L).toDF("v")))
+    longs(dir, names) shouldBe Seq(Seq(3L), Seq(3L))
+    Files.exists(Paths.get(dir + ".tmp")) shouldBe false
+    Files.exists(Paths.get(dir + ".old")) shouldBe false
+  }
+
+  test("a one-relation save round-trips through load") {
+    val dir = freshDir()
+    StateDirs.load(spark, dir) shouldBe None
+    StateDirs.save(dir, Seq(1L, 2L).toDF("v"))
+    StateDirs.load(spark, dir).get.as[Long].collect().sorted shouldBe Array(1L, 2L)
+    StateDirs.save(dir, Seq(3L).toDF("v"))
+    StateDirs.load(spark, dir).get.as[Long].collect() shouldBe Array(3L)
+  }
+
+  test("one RunNightly tick leaves exactly the state layout its readers expect") {
+    val dir = freshDir()
+    val docs = graft.Tables.documents(spark, sfSmoke)
+      .select($"doc_id", $"text", $"lang", $"source")
+    val vecs = graft.Tables.embeddings(spark, sfSmoke).select($"vec_id", $"embedding")
+    RunNightly.tick(spark, dir,
+      docs.filter($"doc_id" % 10 =!= 3), docs.filter($"doc_id" % 10 =!= 7),
+      vecs.filter($"vec_id" % 10 =!= 3), vecs.filter($"vec_id" % 10 =!= 7))
+    // every directory holding parquet files, relative to the state dir
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    val tree =
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(f => root.relativize(f.getParent).toString).toSet
+      } finally walk.close()
+    tree shouldBe Set(
+      "index/band_index", "index/hash_index", "index/bloom_shards",
+      "card/lang_sums", "card/text_index", "card/source_index", "card/word_index",
+      "model/centroids", "model/scales",
+      "vecindex", "cov",
+      "tokenizer/merges", "tokenizer/fertility")
+    root.getParent.toFile.list().toSeq shouldBe Seq("state") // no .tmp or .old beside it
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, SparkEntry}
 import graft.model.{SampleTier, Schemas}
-import graft.sources.CsvEventSource
+import graft.sources.{CsvEventSource, JsonEventSource, LandingFormat}
 import graft.util.TmpDirs
 
 class EventImporterSpec extends SparkSpec {
@@ -100,5 +100,25 @@ class EventImporterSpec extends SparkSpec {
     // only the 20 new days; the first 10 are populated (B9 probe)
     second.size shouldBe 20
     second.min.toString shouldBe "2024-01-11"
+  }
+
+  test("a run releases each day's persisted staging frame, CSV and JSON landings") {
+    val day = LocalDate.parse("2024-01-25")
+    val oneDay = SparkEntry.activityStaging(spark, sfSmoke)
+      .filter($"day" === lit(day.toString).cast("date"))
+    Seq[(LandingFormat, String => Any)](
+      LandingFormat.Csv -> (CsvEventSource.writeLanding(spark, oneDay, _, "activity")),
+      LandingFormat.Json -> (JsonEventSource.writeLanding(spark, oneDay, _, "activity"))
+    ).foreach { case (format, write) =>
+      val dir = TmpDirs.fresh(s"spec-imp-release-$format-landing")
+      write(dir)
+      val imp = new EventImporter(TmpDirs.fresh(s"spec-imp-release-$format-wh"),
+        Schemas.activity, dayTiers, format = format)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      imp.run(spark, dir, "activity") shouldBe Seq(day)
+      withClue(format) {
+        (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+      }
+    }
   }
 }
