@@ -2,7 +2,10 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+
+import graft.util.Json
 
 /** Where does a query's wall time actually go? Runs ONE SparkEntry
   * query with a listener counting jobs / stages / tasks and summing
@@ -41,9 +44,9 @@ object ProfileQuery {
     val t0 = System.nanoTime()
     val n = fn(spark, sfDir).count()
     val wallSec = (System.nanoTime() - t0) / 1e9
-    // listener bus is async; let the counters drain
-    Thread.sleep(2000)
-    println(f"""{"q":"$name","rows":$n,"wall_sec":$wallSec%.1f,""" +
+    // listener bus is async; every event posted so far reaches the counters
+    ListenerBusDrain(spark.sparkContext)
+    println(f"""{"q":${Json.str(name)},"rows":$n,"wall_sec":$wallSec%.1f,""" +
       s""""jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},""" +
       f""""task_time_sec":${taskMs.get / 1e3}%.1f,""" +
       f""""ms_per_job":${if (jobs.get == 0) 0 else wallSec * 1000 / jobs.get}%.1f}""")

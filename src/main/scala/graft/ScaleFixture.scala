@@ -5,23 +5,18 @@ import org.apache.spark.sql.Column
 
 import graft.operators.TextDedup
 
-/** Scale-rehearsal fixture writer — synthesizes a documents/embeddings
-  * corpus with the SAME observable statistics as the driver's
-  * `/root/testdata` tables (measured at sf0.1: 31-word vocabulary,
-  * uniform 10–100-word doc lengths, ~0.32% of docs in exact-dup pairs,
-  * 5 langs at ~41/15/15/15/15%, 20 sources, 64-dim unit-norm
-  * embeddings in 10 clusters) at ANY row count — the driver's data
-  * tops out at sf0.1, and the heavy-tail scaling question ("is the
-  * cascade sublinear where data, not DAG latency, dominates") needs a
-  * 10× point beyond that.
+/** Synthetic corpus generator — documents/embeddings relations with
+  * the SAME observable statistics as the sf fixture tables (measured at
+  * sf0.1: 31-word vocabulary, uniform 10–100-word doc lengths, ~0.32%
+  * of docs in exact-dup pairs, 5 langs at ~41/15/15/15/15%, 20 sources,
+  * 64-dim unit-norm embeddings in 10 clusters) at ANY row count. q235
+  * gates these statistics against a DuckDB re-derivation of the same
+  * hash definitions.
   *
   * Everything is hash-derived (md5 of tagged ids — the repo's no-RNG
   * determinism rule): same args → byte-identical corpus, any
   * partitioning. NOT the driver's exact generator — equivalent
-  * statistics, stated in BASELINE.md where the measurements land.
-  *
-  * Usage: `ScaleFixture <nDocs> <nVecs> <outDir>` — writes
-  * `<outDir>/documents.parquet` and `<outDir>/embeddings.parquet`.
+  * statistics.
   */
 object ScaleFixture {
 
@@ -35,24 +30,10 @@ object ScaleFixture {
   private def tag(t: String, c: Column): Column =
     h(concat(lit(t + ":"), c.cast("string")))
 
-  /** The documents relation at any row count — exposed (not just the
-    * CLI) so q235 can gate the writer's observable statistics against
-    * a DuckDB re-derivation of the same hash definitions.
-    *
-    * `vocabScale` (default 1 = the measured 31-word vocab, the form
-    * q235 gates) grows the vocabulary ×k by suffixing — a REAL corpus
-    * 100× larger has a larger vocabulary (Heaps' law, V ~ N^β); the
-    * fixed 31-word form at 100× is a deliberate near-clique
-    * ADVERSARIAL density (identical-wordset pairs grow ~N²: 27.7k /
-    * 2.86M / 287M at 1×/10×/100× — measured), useful for hitting
-    * walls on purpose but not for scaling exponents. Rehearsals use
-    * scale ≈ √(size multiplier) for Heaps-consistent density. */
+  /** The documents relation at any row count. */
   def documents(spark: org.apache.spark.sql.SparkSession,
-      nDocs: Long, vocabScale: Int = 1): org.apache.spark.sql.DataFrame = {
-    require(vocabScale >= 1, s"vocabScale >= 1: $vocabScale")
-    val v = (1 to vocabScale).flatMap(k =>
-      if (k == 1) vocab else vocab.map(w => s"$w$k"))
-    val vocabCol = array(v.map(lit): _*)
+      nDocs: Long): org.apache.spark.sql.DataFrame = {
+    val vocabCol = array(vocab.map(lit): _*)
     // exact-dup planting at the measured sf0.1 rate: every 625th doc
     // copies its predecessor's text (8 pairs per 5,000 docs)
     val eid = when(col("doc_id") % 625 === 624, col("doc_id") - 1)
@@ -64,7 +45,7 @@ object ScaleFixture {
         transform(sequence(lit(1), col("_len")), i =>
           element_at(vocabCol,
             (pmod(tag("w", concat(col("_eid"), lit("_"), i)),
-              lit(v.size.toLong)) + 1)
+              lit(vocab.size.toLong)) + 1)
               .cast("int"))), " "))
       .withColumn("_lh", pmod(tag("lang", col("doc_id")), lit(1000L)))
       .withColumn("lang",
@@ -103,56 +84,5 @@ object ScaleFixture {
         transform(col("_raw"), x => (x / col("_nrm")).cast("float"))
           .as("embedding"),
         col("label"))
-  }
-
-  /** Events with sf0.1's observable shape: 30-day span from
-    * 2024-01-01, five event types at ~uniform 20%, users hash-uniform
-    * over nUsers, value hash-uniform [0,100) at cent grain (the real
-    * column's mean ≈ 50 — the skew tail is not reproduced, stated;
-    * none of the rehearsal queries read value). */
-  def events(spark: org.apache.spark.sql.SparkSession,
-      nEvents: Long, nUsers: Long): org.apache.spark.sql.DataFrame = {
-    val types = array(Seq("signup", "view", "click", "purchase", "error")
-      .map(lit): _*)
-    spark.range(nEvents).select(col("id").as("event_id"))
-      .withColumn("ts", timestamp_seconds(
-        lit(1704067200L) + pmod(tag("t", col("event_id")), lit(2592000L))))
-      .withColumn("user_id", pmod(tag("u", col("event_id")), lit(nUsers)))
-      .withColumn("event_type", element_at(types,
-        (pmod(tag("e", col("event_id")), lit(5L)) + 1).cast("int")))
-      .withColumn("value",
-        pmod(tag("w", col("event_id")), lit(10000L)).cast("double") / 100.0)
-      .withColumn("props", lit(""))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-  }
-
-  /** Customers in the TPC-H name shape (q183's fuzzy-match base). */
-  def customer(spark: org.apache.spark.sql.SparkSession,
-      nCust: Long): org.apache.spark.sql.DataFrame =
-    spark.range(nCust).select(col("id").as("c_custkey"),
-      concat(lit("Customer#"), lpad(col("id").cast("string"), 9, "0"))
-        .as("c_name"))
-
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: ScaleFixture <nDocs> <nVecs> <outDir> " +
-        "[<nEvents> <nUsers> <nCust> [<vocabScale>]]")
-    val (nDocs, nVecs, out) = (args(0).toLong, args(1).toLong, args(2))
-    val vocabScale = if (args.length >= 7) args(6).toInt else 1
-    val spark = GraftSession.forMain("graft-scale-fixture")
-    documents(spark, nDocs, vocabScale).write.mode("overwrite")
-      .parquet(s"$out/documents.parquet")
-    embeddings(spark, nVecs).write.mode("overwrite")
-      .parquet(s"$out/embeddings.parquet")
-    if (args.length >= 6) {
-      val (nEv, nUs, nCu) = (args(3).toLong, args(4).toLong, args(5).toLong)
-      events(spark, nEv, nUs).write.mode("overwrite")
-        .parquet(s"$out/events.parquet")
-      customer(spark, nCu).write.mode("overwrite")
-        .parquet(s"$out/customer.parquet")
-      println(s"[scale-fixture] wrote $nEv events + $nCu customers to $out")
-    }
-    println(s"[scale-fixture] wrote $nDocs docs + $nVecs vecs to $out")
-    spark.stop()
   }
 }

@@ -49,6 +49,17 @@ object Verify {
     "q21_minhash_lsh_pairs", "q32_minhash_char_shingles",
     "q22_simhash_pairs")
 
+  /** Write `<outDir>/oracle_sql.json` from the [[SparkEntry.oracleSql]]
+    * entries `only` admits (all when None); returns their count. */
+  def writeOracles(outDir: String, only: Option[Set[String]]): Int = {
+    val entries = SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }
+    val json = entries
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    entries.size
+  }
+
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     // optional 3rd arg: comma-separated query-name filter (local iteration;
@@ -60,10 +71,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
 
     // 1. The compare inputs land BEFORE any query runs.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracles(outDir, only)
 
     // 2. One cached copy of each fixture table for all queries.
     Tables.enableMemo()

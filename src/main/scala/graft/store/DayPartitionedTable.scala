@@ -103,6 +103,11 @@ final class DayPartitionedTable(
     * a sibling temp dir and a directory swap — fully distributed, one
     * partition of IO, and never reads the path it overwrites.
     *
+    * The swap keeps [[graft.util.StateDirs.promote]]'s order — park
+    * the live day under a hidden (leading-`.`) name, rename the copy
+    * in, reap the parked one — so the day is always fully old or fully
+    * new; a day found only parked is restored first.
+    *
     * Already-shaped partitions are SKIPPED on a pure file-count
     * listing — no Spark job, no rewrite. Redshift's VACUUM does the
     * same (unsorted-region-only); rewriting every touched day made
@@ -113,23 +118,32 @@ final class DayPartitionedTable(
     * the writeDays rebuild path, and compaction re-establishes it
     * exactly when accretion is present (file count past the target). */
   def compactDay(spark: SparkSession, day: LocalDate): Unit = {
-    if (!hasDay(spark, day)) return
-    val dataFiles = fs(spark)
-      .listStatus(new Path(s"$path/$dayCol=$day"))
+    val f = fs(spark)
+    val src = new Path(s"$path/$dayCol=$day")
+    val parked = new Path(s"$path/.parked-$day")
+    if (!f.exists(src)) {
+      if (!f.exists(parked)) return
+      rename(f, parked, src)
+    }
+    val dataFiles = f.listStatus(src)
       .count(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
     if (dataFiles <= math.max(filesPerDay, 1)) return
-    val src = new Path(s"$path/$dayCol=$day")
     val tmp = new Path(s"$path/.compacting-$day")
-    val f = fs(spark)
     f.delete(tmp, true)
     val rows = spark.read.parquet(src.toString)
     val shaped = rows.repartition(math.max(filesPerDay, 1))
     val sorted = sortCol.fold(shaped)(c => shaped.sortWithinPartitions(col(c)))
     sorted.write.mode("overwrite").parquet(tmp.toString)
-    f.delete(src, true)
-    f.rename(tmp, src): Unit
+    f.delete(parked, true) // a stale copy from a swap that crashed after its rename-in
+    rename(f, src, parked)
+    rename(f, tmp, src)
+    f.delete(parked, true): Unit
   }
+
+  private def rename(f: FileSystem, from: Path, to: Path): Unit =
+    if (!f.rename(from, to))
+      throw new java.io.IOException(s"compactDay: rename $from -> $to failed")
 
   /** D2 — drop day partitions strictly before `cutoff`. Metadata-only. */
   def expireBefore(spark: SparkSession, cutoff: LocalDate): Unit = {

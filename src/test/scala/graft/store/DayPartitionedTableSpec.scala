@@ -90,6 +90,46 @@ class DayPartitionedTableSpec extends SparkSpec {
     t.read(spark).count() shouldBe ev.count() + (before / 2)
   }
 
+  test("D4: compactDay restores a day left only under its parked name") {
+    val root = TmpDirs.fresh("spec-store-parked")
+    val t = new DayPartitionedTable(root, "ev", sortCol = Some("ts"))
+    t.writeDays(eventsWithDay)
+    val day = LocalDate.parse("2024-01-05")
+    val onDay = col("day") === lit(day.toString).cast("date")
+    def dayRows = t.read(spark).filter(onDay).collect().map(_.toString).sorted.toSeq
+    val before = dayRows
+    before should not be empty
+    // a swap that stopped after parking the live partition, before the
+    // compacted copy was renamed in
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(s"${t.path}/day=$day"),
+      java.nio.file.Paths.get(s"${t.path}/.parked-$day"))
+    t.hasDay(spark, day) shouldBe false
+    t.compactDay(spark, day)
+    t.hasDay(spark, day) shouldBe true
+    dayRows shouldBe before
+    new java.io.File(s"${t.path}/.parked-$day").exists() shouldBe false
+  }
+
+  test("D4: compactDay leaves no hidden swap dir behind") {
+    val root = TmpDirs.fresh("spec-store-swap")
+    val t = new DayPartitionedTable(root, "ev", sortCol = Some("ts"))
+    t.writeDays(eventsWithDay)
+    val day = LocalDate.parse("2024-01-05")
+    val dir = new java.io.File(s"${t.path}/day=$day")
+    val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, new java.io.File(dir, "extra1.parquet").toPath)
+    // a stale parked copy, as a swap that stopped before its reap leaves
+    val stale = new java.io.File(s"${t.path}/.parked-$day")
+    stale.mkdirs()
+    java.nio.file.Files.copy(part.toPath, new java.io.File(stale, "old.parquet").toPath)
+    t.compactDay(spark, day)
+    dir.listFiles().count(_.getName.endsWith(".parquet")) shouldBe 1
+    new java.io.File(t.path).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("."))
+      .map(_.getName) shouldBe empty
+  }
+
   test("partition pruning: a day-range read scans only selected partitions") {
     val root = TmpDirs.fresh("spec-store-prune")
     val t = new DayPartitionedTable(root, "ev")
