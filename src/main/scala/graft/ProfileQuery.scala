@@ -3,7 +3,8 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.util.Json
 
@@ -13,7 +14,9 @@ import graft.util.Json
   * driver-side orchestration (job count x scheduling latency, commit
   * protocol, planning). `wall >> task_time/cores` with a large job
   * count means the bottleneck is the DRIVER, and no executor tuning
-  * will move it. Usage: ProfileQuery <sfDir> <queryName>. */
+  * will move it. A stage's wall time goes to the first `graft.` frame
+  * of the call stack that started its SQL execution, else to the
+  * stage name (a JDK frame for broadcast and async stages). Usage: ProfileQuery <sfDir> <queryName>. */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val (sfDir, name) = (args(0), args(1))
@@ -24,11 +27,26 @@ object ProfileQuery {
     val taskMs = new AtomicLong
     val byCallSite =
       new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
+    // one bus thread, in posting order: executions start before their stages
+    val execSite = scala.collection.mutable.Map.empty[Long, String]
+    val stageSite = scala.collection.mutable.Map.empty[Int, String]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet(): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          x.details.linesIterator.find(_.startsWith("graft."))
+            .foreach(execSite(x.executionId) = _)
+        case _ =>
+      }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        Option(s.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => execSite.get(id.toLong))
+          .foreach(stageSite(s.stageInfo.stageId) = _)
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val name = s.stageInfo.name.takeWhile(_ != ':')
+        val name = stageSite.getOrElse(s.stageInfo.stageId,
+          s.stageInfo.name.takeWhile(_ != ':'))
         byCallSite.computeIfAbsent(name, _ => new AtomicLong)
           .addAndGet(
             s.stageInfo.completionTime.getOrElse(0L) -

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.util.Fixpoint
+
 /** Product-analytics operators over the event stream: funnels, cohort
   * retention, Markov transitions, trailing-window anomaly flags,
   * co-occurrence similarity, and a per-column data profiler.
@@ -3397,12 +3399,9 @@ object Analytics {
     * unaffected and conservation-exact variants cost an extra global
     * agg per iteration for no decision value.
     *
-    * Shape at 100 TB: the edge relation materializes ONCE
-    * (localCheckpoint DISK_ONLY, the K207 discipline — it feeds
-    * 2·iters joins); each iteration is one join on src (edge
-    * partitioning reusable across iterations) and one inflow
-    * aggregation on dst; ranks re-checkpoint every 3 iterations so
-    * lineage stays shallow. Iterations are a fixed constant (the
+    * Shape at 100 TB: each round of [[graft.util.Fixpoint.iterate]] is
+    * one join on src with [[graft.util.Fixpoint.symmetricEdges]] (kept
+    * to `nodes`) and one inflow aggregation on dst. Iterations are a fixed constant (the
     * stationary-distribution contract), not convergence-tested —
     * deterministic plans, and 10 rounds is past decision-stability on
     * graphs whose diameter the dedup banding bounds. */
@@ -3417,39 +3416,14 @@ object Analytics {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50]: $iters")
     require(dampingPct >= 1 && dampingPct <= 99,
       s"dampingPct must be in [1,99]: $dampingPct")
-    // edge schema is parameterized like the node id (round-13 ADVICE
-    // item #4: hard-coded a/b edge columns next to an idCol parameter
-    // was an undocumented asymmetry); fail fast on a missing column
-    // rather than letting Catalyst capture a same-named bystander
-    require(edges.columns.contains(srcCol) && edges.columns.contains(dstCol),
-      s"pageRank: edges must carry '$srcCol'/'$dstCol' columns " +
-        s"(got ${edges.columns.mkString(", ")})")
     val base = (100 - dampingPct) * 10000L
-    // Loop discipline (round-15/16 optimization; guide §2.4/§3.1): the
-    // undirected edge relation materializes ONCE; the out-degree is
-    // attached ONCE (the old loop re-joined deg every round); and —
-    // round 16 — the per-round `nodes ⋈ inflow` join is GONE: the loop
-    // runs over the SYMMETRIC closure restricted to src,dst ∈ nodes
-    // (`undLoop`), where every node that can send also receives each
-    // round (its reverse edge is present), so the inflow aggregation
-    // itself enumerates exactly the loop node set and
-    // `ranks = base + inflow` needs no node-relation join. This is
-    // EXACTLY the old semantics: a source outside `nodes` never had a
-    // rank row to send from; a destination outside `nodes` was dropped
-    // by the old left join every round; a node with no in-`nodes`
-    // neighbor receives nothing forever, so its rank is `base` — which
-    // the final coalesce supplies without it ever riding the loop.
-    // Round 1 is folded into the degree relation (r₀ = 10⁶ is a
-    // constant, so round-1 inflow is a pure function of undLoop) — one
-    // aggregation replaces the init-distinct plus the first join, the
-    // connectedComponents init-fold discipline. Degrees still count
-    // EVERY und neighbor (in or out of `nodes`), as before.
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // The loop runs over the closure restricted to src,dst ∈ nodes
+    // (`undLoop`): every node that sends also receives (its reverse
+    // edge is present), so the inflow aggregation enumerates the loop
+    // nodes and no round joins `nodes`. A node with no in-`nodes`
+    // neighbor ranks `base`, which the final coalesce supplies.
+    // Degrees count EVERY und neighbor (in or out of `nodes`).
+    val und = Fixpoint.symmetricEdges(edges, srcCol, dstCol)
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val ids = nodes.select(col(idCol).as("id"))
     val undLoop = und.join(deg, Seq("src"))
@@ -3458,22 +3432,18 @@ object Analytics {
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // round 1 folded: inflow₁(u) = Σ_{v∈N(u)} damping·10⁶ div (100·d_v)
-    var ranks = undLoop
+    val ranks1 = undLoop
       .select(col("dst").as("id"),
         expr(s"$dampingPct * 1000000 div (100 * d)").as("c"))
       .groupBy(col("id"))
       .agg((lit(base) + sum(col("c"))).as("r"))
-    for (i <- 2 to iters) {
-      val inflow = undLoop
+    val ranks = Fixpoint.iterate(ranks1, iters - 1) { ranks =>
+      undLoop
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"),
           expr(s"$dampingPct * r div (100 * d)").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      ranks = inflow.select(col("id"),
-        (lit(base) + col("inflow")).as("r"))
-      if (i % 3 == 0 && i < iters)
-        ranks = ranks.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        .groupBy(col("id"))
+        .agg((lit(base) + sum(col("c"))).as("r"))
     }
     nodes.select(col(idCol).as("id"))
       .join(ranks, Seq("id"), "left")
@@ -3615,11 +3585,10 @@ object Analytics {
     * until first reached). Fixed round count, not convergence-tested
     * (the [[pageRank]] contract — deterministic plans).
     *
-    * Shape at 100 TB: the edge relation materializes once
-    * (localCheckpoint DISK_ONLY) and feeds one join + one
-    * (node, label)-keyed count + one top-1 window per round; labels
-    * are the only thing that shuffles. The window partitions by node
-    * id over the per-(node, label) COUNT relation — bounded by a
+    * Shape at 100 TB: each round of [[graft.util.Fixpoint.iterate]]
+    * is one join with [[graft.util.Fixpoint.symmetricEdges]] + one
+    * (node, label)-keyed count + one top-1 window; labels are the only
+    * thing that shuffles. The window partitions by node id over the per-(node, label) COUNT relation — bounded by a
     * node's distinct neighbor labels, never its raw degree. */
   def labelPropagation(
       edges: DataFrame,
@@ -3630,22 +3599,13 @@ object Analytics {
       srcCol: String = "a",
       dstCol: String = "b"): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50]: $iters")
-    require(edges.columns.contains(srcCol) && edges.columns.contains(dstCol),
-      s"labelPropagation: edges must carry '$srcCol'/'$dstCol' columns")
-    // Round-15 optimization (guide §2.4): the seed column rides INSIDE
-    // the loop state — the old plan re-joined `seed` once per round
-    // plus once at the end (a node-sized join × (iters+1) removed).
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // the seed column rides inside the loop state: no round re-joins it
+    val und = Fixpoint.symmetricEdges(edges, srcCol, dstCol)
     val ids = nodes.select(col(idCol).as("id"))
     val seed = seeds.select(col(idCol).as("id"), col("label").as("_seed"))
-    var lab = ids.join(seed, Seq("id"), "left")
+    val lab0 = ids.join(seed, Seq("id"), "left")
       .select(col("id"), col("_seed").as("label"), col("_seed"))
-    for (i <- 1 to iters) {
+    val lab = Fixpoint.iterate(lab0, iters) { lab =>
       val counts = und
         .join(lab.select(col("id").as("dst"), col("label").as("_nl")),
           Seq("dst"))
@@ -3657,21 +3617,10 @@ object Analytics {
       val maj = counts.withColumn("_rn", row_number().over(top))
         .filter(col("_rn") === 1)
         .select(col("id"), col("_nl").as("_maj"))
-      lab = lab.join(maj, Seq("id"), "left")
+      lab.join(maj, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("_seed"), col("_maj"), col("label")).as("label"),
           col("_seed"))
-      // Checkpoint EVERY round (round 16): `lab` feeds the next round
-      // TWICE (directly and through `maj`), so an uncheckpointed loop
-      // doubles the plan per round — 2^iters copies of the seed join,
-      // all recomputed (profiled at sf0.1: 126 s of task time for a
-      // 5k-node graph). The connectedComponents loop checkpoints per
-      // round for the same two-consumer reason; pageRank's every-3
-      // cadence is correct there because ranks feeds the next round
-      // ONCE (linear chain, no recompute blow-up).
-      if (i < iters)
-        lab = lab.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
     }
     lab.select(col("id"), col("label"), col("_seed").isNotNull.as("is_seed"))
   }
@@ -3856,7 +3805,8 @@ object Analytics {
     * Shape at 100 TB: matches roll up ONCE to the pair relation
     * (items²-bounded, in practice comparison-graph-sized); each MM
     * round is pair⋈strengths joins on item-keyed relations —
-    * corpus-sized data is touched exactly once. */
+    * corpus-sized data is touched exactly once. The rounds run on
+    * [[graft.util.Fixpoint.iterate]]. */
   def bradleyTerry(
       matches: DataFrame,
       winnerCol: String,
@@ -3889,8 +3839,8 @@ object Analytics {
       .join(wins, Seq("item"), "left")
       .select(col("item"), coalesce(col("n_wins"), lit(0L)).as("n_wins"))
       .localCheckpoint()
-    var pi = stats.select(col("item"), lit(1000000L).as("r"))
-    for (_ <- 1 to iters) {
+    val pi0 = stats.select(col("item"), lit(1000000L).as("r"))
+    val pi = Fixpoint.iterate(pi0, iters) { pi =>
       val terms = gC
         .join(pi.select(col("item").as("i"), col("r").as("ri")), Seq("i"))
         .join(pi.select(col("item").as("j"), col("r").as("rj")), Seq("j"))
@@ -3908,12 +3858,7 @@ object Analytics {
       // items-sized relation: the two unpartitioned windows are over
       // the MM state, never the match corpus. nItems ≤ 2000 keeps
       // r1·nItems·10⁶ provably inside long (r1 ≤ 2·10⁶·nItems).
-      // localCheckpoint per round: each round reads pi TWICE (the i
-      // and j sides), so an unbroken lineage doubles per round —
-      // 4 rounds of a leaderboard-sized relation is a deep exponential
-      // plan the analyzer chews minutes on; the checkpoint keeps every
-      // round O(items) flat.
-      pi = raw
+      raw
         .withColumn("_tot", sum(col("r1")).over(Window.partitionBy()))
         .withColumn("_cnt", count(lit(1)).over(Window.partitionBy()))
         .select(col("item"),
@@ -3921,7 +3866,6 @@ object Analytics {
             raise_error(lit("bradleyTerry: item count exceeds the " +
               "normalization envelope (2000); shard the leaderboard")))
             .otherwise(expr("r1 * (_cnt * 1000000) div _tot")).as("r"))
-        .localCheckpoint()
     }
     val nMatches = gC.select(explode(array(
         struct(col("i").as("item"), col("n")),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.util.Fixpoint
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * All hash primitives here are md5-based so a DuckDB oracle can mirror
@@ -1025,41 +1027,25 @@ object TextDedup {
     * instead of O(diameter) for plain neighbor-min (a 1,000-node path
     * converges in ~12 rounds, not 1,000).
     *
-    * Scale hygiene (each round): the old label rides inside the new
-    * frame so the changed-label count is ONE aggregation, not a second
-    * self-join; `localCheckpoint()` truncates lineage so analyzer cost
-    * and stack depth stay constant across rounds (a cluster caveat:
-    * localCheckpoint blocks die with their executor — on a real
-    * cluster prefer `spark.sparkContext.setCheckpointDir` + reliable
-    * `checkpoint()` for jobs that cannot afford a recompute-from-root).
-    * Returns (id, label). */
+    * The rounds run on [[graft.util.Fixpoint.untilStable]] over
+    * [[graft.util.Fixpoint.symmetricEdges]]; the old label rides in
+    * each round's state, so the changed count is one aggregation. A
+    * node seen only in an `(x, x)` pair is its own component. Returns
+    * (id, label). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    // Loop discipline (round-15 optimization; guide §2.4):
-    //  - the first propagation round folds into the label INIT: both
-    //    edge directions exist, so grouping by dst enumerates every
-    //    node and label₀ = least(id, min neighbor) — one aggregation
-    //    replaces the old distinct-ids init plus the first round;
-    //  - l1 is persisted across its two pointer-jump uses (the old
-    //    plan recomputed the neighbor-min join TWICE per round).
-    // (Tried and REVERTED, both measured slower at sf0.1: SHUFFLE_HASH
-    // hints on the label-side joins — they force the checkpointed edge
-    // relation, which scans back as UnknownPartitioning under AQE, to
-    // re-exchange EVERY round, where the planner's broadcast keeps it
-    // in place; and a pre-partition+persist of the edges — cache
-    // round-trips cost more than the label-side exchanges they save.
-    // At 100 TB size-based planning never broadcasts the node-sized
-    // label relations anyway, so the unhinted form is scale-correct.)
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint() // reused every round: materialize once, no lineage
-    var labels = edges.groupBy(col("dst"))
+    // Round 1 folds into the init: label₀ = least(id, min neighbor).
+    // (SHUFFLE_HASH hints on the label-side joins measured slower at
+    // sf0.1: the checkpointed edges scan back as UnknownPartitioning
+    // and re-exchange every round, where a broadcast keeps them put.)
+    val edges = Fixpoint.symmetricEdges(pairs, "a", "b")
+    val selfOnly = pairs.filter(col("a") === col("b"))
+      .select(col("a").as("src"), col("b").as("dst"))
+    val init = edges.unionByName(selfOnly)
+      .groupBy(col("dst"))
       .agg(min(col("src")).as("_nmin"))
       .select(col("dst").as("id"),
         least(col("dst"), col("_nmin")).as("label"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    Fixpoint.untilStable(init, maxIter, "connectedComponents") { labels =>
       val neighborMin = edges
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"))
@@ -1069,35 +1055,16 @@ object TextDedup {
         .join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("old_label"),
           least(col("old_label"), coalesce(col("nmin"), col("old_label"))).as("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // pointer jump: label ← label(label). Every label value is the id
       // of a node in the same component, so the lookup stays in-component
       // and only ever decreases the label.
-      // LAZY checkpoint + the changed-count action materializes it
-      // (round 16, the guardPairBudget discipline): lineage truncates
-      // at plan level immediately, and the count job doubles as the
-      // block materialization — one job per round where the eager
-      // checkpoint-then-count pair cost two. l1 stays cached until
-      // after that action (next reads it twice).
       val next = l1.as("x")
         .join(l1.select(col("id").as("label"), col("label").as("jmp")).as("y"),
           Seq("label"), "left")
         .select(col("id"), col("old_label"),
           least(col("label"), coalesce(col("jmp"), col("label"))).as("label"))
-        .localCheckpoint(false)
-      val changed = next
-        .agg(coalesce(sum(when(col("label") =!= col("old_label"), 1L)), lit(0L)))
-        .first().getLong(0)
-      l1.unpersist(blocking = false)
-      labels = next.select("id", "label")
-      converged = changed == 0L
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(component diameter exceeds maxIter) — raise maxIter")
-    labels
+      (next, col("label") =!= col("old_label"))
+    }.select("id", "label")
   }
 
   /** Set Jaccard over word sets (the exact verify stage after LSH). */
@@ -1192,11 +1159,9 @@ object TextDedup {
       .join(ws.select(col("wid").as("b"), col("ws").as("wb")), Seq("b"))
       .filter(round(jaccard(col("wa"), col("wb")), 6) >= minJaccard)
       .select(col("a"), col("b"))
-    // No extra localCheckpoint here (round 16): connectedComponents'
-    // result is already a narrow projection over its own final-round
-    // eager checkpoint — materialized, lineage-free, and independent
-    // of the corpus cache dropped below. Re-checkpointing it cost one
-    // more job per cascade for blocks that duplicated existing ones.
+    // No extra checkpoint: the labels project the last round's
+    // checkpoint, which its changed-count already materialized, so
+    // they do not depend on the corpus cache dropped below.
     val labels = connectedComponents(gated)
     survivors.unpersist()
     labels

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The persisted-state protocol of every nightly state dir, through
@@ -22,14 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * copy in `<dir>.tmp`; re-running the producing job (which re-stages
   * and calls promote again) always converges. No file-by-file walk,
   * so no window where a reader sees a mix of parts. [[load]] reads a
-  * state only when every part is present. */
+  * state only when every part is present, and first restores a state
+  * that a crash between the two renames left parked at `<dir>.old`. */
 object StateDirs {
-
-  /** Scheme-aware existence probe (java.io.File.exists is local-only). */
-  private def exists(conf: Configuration, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(conf).exists(p)
-  }
 
   /** Stage each named part under `<dir>.tmp/<name>`, then [[promote]]. */
   def save(dir: String, parts: Seq[(String, DataFrame)]): Unit = {
@@ -45,20 +40,28 @@ object StateDirs {
     promote(df.sparkSession.sparkContext.hadoopConfiguration, dir)
   }
 
+  /** The scheme-aware filesystem of `dir` when `dir` holds a state,
+    * once a state that a crash between [[promote]]'s two renames left
+    * at `<dir>.old` is renamed back. */
+  private def live(spark: SparkSession, dir: String): Option[FileSystem] = {
+    val dst = new Path(dir)
+    val old = new Path(dir + ".old")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
+      throw new java.io.IOException(s"load: rename $old -> $dst failed")
+    Some(fs).filter(_.exists(dst))
+  }
+
   /** The named parts in order, or None unless every one exists. */
   def load(spark: SparkSession, dir: String,
-      names: Seq[String]): Option[Seq[DataFrame]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (names.forall(n => exists(conf, s"$dir/$n")))
-      Some(names.map(n => spark.read.parquet(s"$dir/$n")))
-    else None
-  }
+      names: Seq[String]): Option[Seq[DataFrame]] =
+    live(spark, dir)
+      .filter(fs => names.forall(n => fs.exists(new Path(s"$dir/$n"))))
+      .map(_ => names.map(n => spark.read.parquet(s"$dir/$n")))
 
   /** One-relation state, or None when `dir` does not exist. */
   def load(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (exists(spark.sparkContext.hadoopConfiguration, dir))
-      Some(spark.read.parquet(dir))
-    else None
+    live(spark, dir).map(_ => spark.read.parquet(dir))
 
   /** Promote `<dir>.tmp` to `<dir>` without ever destroying the last
     * live state before the new one is in place: park the destination

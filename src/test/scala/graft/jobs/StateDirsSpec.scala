@@ -107,6 +107,28 @@ class StateDirsSpec extends SparkSpec {
     StateDirs.load(spark, dir).get.as[Long].collect() shouldBe Array(3L)
   }
 
+  // The crash window between promote's two renames: the live state is
+  // parked at `<dir>.old`, `<dir>` is gone, the new copy sits in `.tmp`.
+  private def parkLive(dir: String): Unit =
+    Files.move(Paths.get(dir), Paths.get(dir + ".old"))
+
+  test("load restores a multi-part state parked at .old by a crashed promote") {
+    val dir = freshDir()
+    val names = Seq("a", "b")
+    StateDirs.save(dir, Seq("a" -> Seq(1L).toDF("v"), "b" -> Seq(2L, 3L).toDF("v")))
+    parkLive(dir)
+    longs(dir, names) shouldBe Seq(Seq(1L), Seq(2L, 3L))
+    Files.exists(Paths.get(dir + ".old")) shouldBe false
+  }
+
+  test("load restores a one-relation state parked at .old by a crashed promote") {
+    val dir = freshDir()
+    StateDirs.save(dir, Seq(1L, 2L).toDF("v"))
+    parkLive(dir)
+    StateDirs.load(spark, dir).get.as[Long].collect().sorted shouldBe Array(1L, 2L)
+    Files.exists(Paths.get(dir + ".old")) shouldBe false
+  }
+
   test("one RunNightly tick leaves exactly the state layout its readers expect") {
     val dir = freshDir()
     val docs = graft.Tables.documents(spark, sfSmoke)
