@@ -5,10 +5,9 @@ import graft.util.Json
 /** Benchmark main — prints a TRUNCATION-PROOF block of JSON lines the
   * driver parses from a fixed-size stdout TAIL.
   *
-  * Each query runs `SPARK_GRAFT_BENCH_REPEATS` times (default 3) and
-  * reports the per-query MINIMUM: a shared-box bench is noisy (the
-  * round-2 driver run recorded 15 s for a query that takes <1 s on an
-  * idle machine), and min-of-N is the standard way to measure the
+  * Each query runs [[Repeats]] times and reports the per-query
+  * MINIMUM: a shared-box bench is noisy (a round-2 run recorded
+  * 15 s for a query that takes <1 s on an idle machine), and min-of-N is the standard way to measure the
   * engine rather than the neighbors. The max-min spread is emitted per
   * query so variance is visible in the artifact itself.
   *
@@ -75,6 +74,9 @@ import graft.util.Json
 object Bench {
 
   type QResult = (String, Either[String, (Double, Double)]) // name -> err | (min, spread)
+
+  /** Runs per query and per streaming gate; each reports its minimum. */
+  private val Repeats = 3
 
   // Millisecond precision keeps lines short (less to truncate) without
   // losing anything a seconds-scale bench can measure.
@@ -237,7 +239,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
     // optional args: query-name filter for local iteration (the driver
     // passes none and always measures the full set). The literal arg
     // "streaming" runs ONLY the streaming gate section. Unknown names
@@ -285,7 +286,7 @@ object Bench {
     val results: Seq[QResult] =
       SparkEntry.benchQueries.filter(n => only.forall(_.contains(n))).map { name =>
         val fn = SparkEntry.queries(name)
-        val runs = (1 to repeats).map { _ =>
+        val runs = (1 to Repeats).map { _ =>
           val t0 = System.nanoTime()
           // noop sink: full plan executes (a bare .count() can let Spark
           // skip evaluating projected expressions under column pruning).
@@ -303,25 +304,14 @@ object Bench {
         res.left.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
         name -> res
       }
-    // Streaming throughput section (round-11 ask #6): each of the 10
-    // gates run ONCE by default (a full 11-gate pass is ~3.6 min at
-    // sf0.1 — measured round 15 — so min-of-N inside the driver
-    // window is a deliberate opt-in, not the default), reported as
-    // source-relation rows/s so a state-handling regression shows up
-    // round over round. SPARK_GRAFT_STREAM_REPEATS=N turns on the
-    // q182-style best-of-N discipline for a deep-dive; the round-15
-    // interleaved A/B (BASELINE r15 row) showed single-run gate
-    // readings spread ±10% with box load, which the bracketing
-    // shared-8 sentinels already flag. Skipped under a query-name
-    // filter (local iteration measures the named batch queries only).
-    // Default 3 since round 16 (round-15 verdict ask #9): the r14→r15
-    // artifacts swung every gate 1.16–1.66× with ZERO streaming code
-    // change, proving single-shot gate numbers are noise; min-of-3
-    // costs ~7 extra minutes at sf0.1 and makes the gate line a real
-    // round-over-round comparison. SPARK_GRAFT_STREAM_REPEATS=1
-    // restores the old single-shot behavior for quick local passes.
-    val streamRepeats =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_REPEATS", "3").toInt.max(1)
+    // Streaming throughput section (round-11 ask #6): each gate is
+    // reported as source-relation rows/s, best of [[Repeats]], so a
+    // state-handling regression shows up round over round. Best of 3
+    // since round 16: the r14→r15 artifacts swung every gate
+    // 1.16–1.66× with ZERO streaming code change, proving single-shot
+    // gate numbers are noise; min-of-3 costs ~7 extra minutes at
+    // sf0.1. Skipped under a query-name filter (local iteration
+    // measures the named batch queries only).
     val gates: Seq[(String, Either[String, (Double, Long)])] =
       if (only.nonEmpty && !streamingOnly) Seq.empty
       else {
@@ -329,7 +319,7 @@ object Bench {
           "events" -> Tables.events(spark, sfDir).count(),
           "documents" -> Tables.documents(spark, sfDir).count())
         SparkEntry.streamingGates.map { case (name, table) =>
-          val runs = (1 to streamRepeats).map { _ =>
+          val runs = (1 to Repeats).map { _ =>
             val t0 = System.nanoTime()
             val r =
               try { SparkEntry.queries(name)(spark, sfDir)
@@ -368,7 +358,7 @@ object Bench {
     // spread + packed minima + summary stay the LAST three lines (tail
     // contract); the streaming line sits just above them so its
     // trailing gates map is the next element a tight tail preserves
-    val lines = renderLines(sfDir, repeats, results, sentinel)
+    val lines = renderLines(sfDir, Repeats, results, sentinel)
     (lines.dropRight(3) ++ streamingLine.toSeq ++ lines.takeRight(3))
       .foreach(println)
     spark.stop()

@@ -149,13 +149,11 @@ object Verify {
     //  Phased beats overlapped here BECAUSE the bottleneck is driver
     //  job-scheduling throughput, not executor cores.
     val cores = spark.sparkContext.defaultParallelism
-    val nThreads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS").map(_.toInt)
-      .getOrElse(math.max(2, math.min(8, cores / 4)))
+    val nThreads = math.max(2, math.min(8, cores / 4))
     // width 6 measured 250 s vs width 4's 544 s on the same tree —
     // the halved per-pipeline job counts (see BASELINE r14) freed the
     // driver throughput the old width was protecting
-    val nStateful = sys.env.get("SPARK_GRAFT_VERIFY_STATEFUL_THREADS")
-      .map(_.toInt).getOrElse(math.max(2, math.min(6, cores / 5)))
+    val nStateful = math.max(2, math.min(6, cores / 5))
     val okCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
     // longest pipelines first so the group pool's tail is short ones

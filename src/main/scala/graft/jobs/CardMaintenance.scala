@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, TextDedup}
@@ -150,29 +150,18 @@ object CardMaintenance {
     graft.util.StateDirs.load(spark, stateDir, Parts)
       .map { case Seq(l, t, s, w) => CardState(l, t, s, w) }
 
-  /** Persist through [[graft.util.StateDirs.save]]. */
-  def save(state: CardState, stateDir: String): Unit =
-    graft.util.StateDirs.save(stateDir, Parts.zip(Seq(
-      state.langSums, state.textIndex, state.sourceIndex, state.wordIndex)))
-
-  /** CLI — `CardMaintenance <stateDir> <oldSnap> <newSnap> [idCol
-    * textCol]`: bootstrap with a rebuild of the OLD snapshot when no
-    * state exists, tick to the new one, persist, print the card. */
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: CardMaintenance <stateDir> <oldSnap> <newSnap> [idCol textCol]")
-    val Array(stateDir, oldPath, newPath) = args.take(3)
-    val idCol = if (args.length > 3) args(3) else "doc_id"
-    val textCol = if (args.length > 4) args(4) else "text"
-    val spark = graft.GraftSession.forMain("graft-card-maintenance")
-    val cols = Seq(col(idCol), col(textCol), col("lang"), col("source"))
-    val oldSnap = spark.read.parquet(oldPath).select(cols: _*)
-    val newSnap = spark.read.parquet(newPath).select(cols: _*)
-    val state = load(spark, stateDir)
-      .getOrElse(rebuild(oldSnap, idCol, textCol))
-    val next = nightly(state, oldSnap, newSnap, idCol, textCol)
-    save(next, stateDir)
-    card(load(spark, stateDir).get).orderBy(col("lang")).show(100, false)
-    spark.stop()
+  /** Persist through [[graft.util.StateDirs.save]]; returns the rows
+    * of [[card]]: the languages with a row in every part (its inner
+    * joins), each part's languages observed as it is written. */
+  def save(state: CardState, stateDir: String): Long = {
+    val live = col("cnt") > 0
+    val parts = Seq(state.langSums -> lit(true), state.textIndex -> live,
+      state.sourceIndex -> live, state.wordIndex -> live)
+    val seen = parts.map(_ => Observation())
+    graft.util.StateDirs.save(stateDir, Parts.zip(parts.zip(seen).map {
+      case ((df, kept), o) => df.observe(o, collect_set(when(kept, col("lang"))).as("langs"))
+    }))
+    seen.map(_.get("langs").asInstanceOf[scala.collection.Seq[String]].toSet)
+      .reduce(_ intersect _).size.toLong
   }
 }

@@ -155,37 +155,9 @@ object IndexMaintenance {
     graft.util.StateDirs.load(spark, stateDir, Parts)
       .map { case Seq(b, h, s) => IndexState(b, h, s) }
 
-  /** Persist through [[graft.util.StateDirs.save]]. */
-  def save(state: IndexState, stateDir: String): Unit =
+  /** Persist through [[graft.util.StateDirs.save]]; returns the rows
+    * written per part: band index, hash index, Bloom shards. */
+  def save(state: IndexState, stateDir: String): Seq[Long] =
     graft.util.StateDirs.save(stateDir,
       Parts.zip(Seq(state.bandIndex, state.hashIndex, state.bloomShards)))
-
-  /** CLI — the nightly job the way [[RunImport]] wires the reference
-    * pipelines: `IndexMaintenance <stateDir> <oldSnap.parquet>
-    * <newSnap.parquet> [idCol textCol]`. First run (no state at
-    * `stateDir`) bootstraps with a full [[rebuild]] of the OLD
-    * snapshot, so the tick that follows is exercised even on
-    * bootstrap; subsequent runs load the persisted state and pay only
-    * O(changed). */
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: IndexMaintenance <stateDir> <oldSnap> <newSnap> [idCol textCol]")
-    val Array(stateDir, oldPath, newPath) = args.take(3)
-    val idCol = if (args.length > 3) args(3) else "doc_id"
-    val textCol = if (args.length > 4) args(4) else "text"
-    val spark = graft.GraftSession.forMain("graft-index-maintenance")
-    val oldSnap = spark.read.parquet(oldPath).select(col(idCol), col(textCol))
-    val newSnap = spark.read.parquet(newPath).select(col(idCol), col(textCol))
-    val state = load(spark, stateDir)
-      .getOrElse(rebuild(oldSnap, idCol, textCol))
-    val next = nightly(state, oldSnap, newSnap, idCol, textCol)
-    save(next, stateDir)
-    // count the SAVED files, not `next`: its lazy plans still point at
-    // the previous state's dirs, which save's renames just replaced
-    val saved = load(spark, stateDir).get
-    println(s"[index-maintenance] state at $stateDir: " +
-      s"bands=${saved.bandIndex.count()} hashes=${saved.hashIndex.count()} " +
-      s"shards=${saved.bloomShards.count()}")
-    spark.stop()
-  }
 }

@@ -68,7 +68,8 @@ object RunNightly {
   }
 
   /** One full nightly tick over a persisted state dir. Returns the
-    * summary line printed by main (counts per maintained relation).
+    * summary line printed by main: the rows each family's save wrote
+    * per maintained relation, and the cap audit over the band index.
     *
     * The five families run concurrently; if one fails, the others
     * still run to completion, and `tick` throws the first failure only
@@ -97,19 +98,32 @@ object RunNightly {
     // each family's small serialized jobs back-fill executor slots the
     // others' stragglers leave idle, under the session's FAIR
     // scheduler. Determinism is untouched — no family reads another's
-    // output, and the summary below runs after the barrier.
+    // output.
     val ov = oldVecs.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val nv = newVecs.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val postDir = s"$stateDir/vecindex"
     val covDir = s"$stateDir/cov"
-    val steps: Seq[() => Unit] = Seq(
+    // Each step returns what its saves counted as they wrote, so the
+    // summary after the barrier formats values and runs no job.
+    val steps: Seq[() => Map[String, Long]] = Seq(
       // 1. text dedup indexes
       () => {
         val idxState = IndexMaintenance.load(spark, s"$stateDir/index")
           .getOrElse(IndexMaintenance.rebuild(oldDocs, "doc_id", "text"))
         val idxNext = IndexMaintenance.nightly(
           idxState, oldDocs, newDocs, "doc_id", "text")
-        IndexMaintenance.save(idxNext, s"$stateDir/index")
+        val Seq(bands, hashes, _) = IndexMaintenance.save(idxNext, s"$stateDir/index")
+        // Guard surfacing (round-12 ask #6): a binding cap on tonight's
+        // corpus is a REPORTED event. The audit reads the band index
+        // just saved (one bands×N rollup, zero re-banding); its
+        // pairs_full is the PRE-refinement upper bound on the
+        // cascade's K207 budget estimate — conservative, so
+        // `binding=false` here certifies the refined cascade too.
+        val guard = graft.operators.TextDedup.capAuditOverBands(
+          spark.read.parquet(s"$stateDir/index/band_index"), degreeCap = 100).head()
+        Map("hashes" -> hashes, "bands" -> bands,
+          "capped" -> guard.getAs[Long]("n_capped_buckets"),
+          "pairs_est" -> guard.getAs[Long]("pairs_full"))
       },
       // 2. release data card
       () => {
@@ -117,7 +131,7 @@ object RunNightly {
           .getOrElse(CardMaintenance.rebuild(oldDocs, "doc_id", "text"))
         val cardNext = CardMaintenance.nightly(
           cardState, oldDocs, newDocs, "doc_id", "text")
-        CardMaintenance.save(cardNext, s"$stateDir/card")
+        Map("cardlangs" -> CardMaintenance.save(cardNext, s"$stateDir/card"))
       },
       // 3. vector index under the pinned (or bootstrap-trained) model
       () => {
@@ -130,15 +144,15 @@ object RunNightly {
         }
         val postings = StateDirs.load(spark, postDir).getOrElse(
           Similarity.ivfSqIndexBuild(ov, "id", "vec", model.centroids, model.scales))
-        StateDirs.save(postDir, Similarity.ivfSqIndexMaintain(
-          postings, ov, nv, "id", "vec", model.centroids, model.scales))
+        Map("postings" -> StateDirs.save(postDir, Similarity.ivfSqIndexMaintain(
+          postings, ov, nv, "id", "vec", model.centroids, model.scales)))
       },
       // 4. covariance state (kilo-unit sufficient stats)
       () => {
         val covState = StateDirs.load(spark, covDir).getOrElse(
           Similarity.covarianceStats(oldVecs.select(col("embedding")), "embedding", dims))
-        StateDirs.save(covDir, Similarity.covarianceDelta(
-          covState, oldVecs, newVecs, "vec_id", "embedding", dims))
+        Map("cov" -> StateDirs.save(covDir, Similarity.covarianceDelta(
+          covState, oldVecs, newVecs, "vec_id", "embedding", dims)))
       },
       // 5. tokenizer: merges bootstrap-TRAINED then PINNED (the
       // quantizer's persist/pin lifecycle — a scheduled retrain deletes
@@ -149,51 +163,20 @@ object RunNightly {
           .getOrElse(TokenizerMaintenance.rebuild(oldDocs, "doc_id", "text"))
         val tokNext = TokenizerMaintenance.nightly(
           tokState, oldDocs, newDocs, "doc_id", "text")
-        TokenizerMaintenance.save(tokNext, s"$stateDir/tokenizer")
+        val Seq(merges, langs) = TokenizerMaintenance.save(tokNext, s"$stateDir/tokenizer")
+        Map("merges" -> merges, "langs" -> langs)
       })
-    graft.util.Par.foreach(steps)(_.apply())
-
-    // summary reads the SAVED state fresh from disk — the pre-save
-    // DataFrames' plans still point at the replaced previous files
-    val index = IndexMaintenance.load(spark, s"$stateDir/index").get
-    val tok = TokenizerMaintenance.load(spark, s"$stateDir/tokenizer").get
-    // Guard surfacing (round-12 ask #6): a binding cap on tonight's
-    // corpus is a REPORTED event. The audit reads the MAINTAINED band
-    // index (one bands×N rollup, zero re-banding); its pairs_full is
-    // the PRE-refinement upper bound on the cascade's K207 budget
-    // estimate — conservative, so `binding=false` here certifies the
-    // refined cascade too.
-    val guard = graft.operators.TextDedup.capAuditOverBands(
-      index.bandIndex, degreeCap = 100).head()
-    val gCapped = guard.getAs[Long]("n_capped_buckets")
-    val gPairs = guard.getAs[Long]("pairs_full")
+    val n = graft.util.Par.map(steps)(_.apply()).reduce(_ ++ _)
     val gBudget = graft.operators.TextDedup.DefaultLshPairBudget
-    // all relation counts in ONE union-of-aggregates job (round 16,
-    // guide §5 driver/actions: the old per-relation .count() chain was
-    // seven serialized driver round-trips for seven tiny reads)
-    def cnt(tag: String, df: DataFrame): DataFrame =
-      df.groupBy().agg(count(lit(1)).as("n"))
-        .select(lit(tag).as("t"), col("n"))
-    val counted = Seq(
-      "hashes" -> index.hashIndex,
-      "bands" -> index.bandIndex,
-      "cardlangs" -> CardMaintenance.card(CardMaintenance.load(spark, s"$stateDir/card").get),
-      "postings" -> spark.read.parquet(postDir),
-      "cov" -> spark.read.parquet(covDir),
-      "merges" -> tok.merges,
-      "langs" -> tok.fertility)
-      .map { case (t, df) => cnt(t, df) }
-      .reduce(_.unionByName(_))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    s"[nightly] index: hashes=${counted("hashes")} " +
-      s"bands=${counted("bands")} | " +
-      s"card: langs=${counted("cardlangs")} | " +
-      s"vecindex: postings=${counted("postings")} | " +
-      s"cov: pairs=${counted("cov")} | " +
-      s"tokenizer: merges=${counted("merges")} " +
-      s"langs=${counted("langs")} | " +
-      s"guards: capped_buckets=$gCapped pairs_est=$gPairs " +
-      s"budget=$gBudget binding=${gCapped > 0 || gPairs > gBudget}"
+    s"[nightly] index: hashes=${n("hashes")} " +
+      s"bands=${n("bands")} | " +
+      s"card: langs=${n("cardlangs")} | " +
+      s"vecindex: postings=${n("postings")} | " +
+      s"cov: pairs=${n("cov")} | " +
+      s"tokenizer: merges=${n("merges")} " +
+      s"langs=${n("langs")} | " +
+      s"guards: capped_buckets=${n("capped")} pairs_est=${n("pairs_est")} " +
+      s"budget=$gBudget binding=${n("capped") > 0 || n("pairs_est") > gBudget}"
   }
 
   /** CLI: `RunNightly <stateDir> <oldDocs> <newDocs> <oldVecs>

@@ -158,25 +158,13 @@ object TokenizerMaintenance {
     graft.util.StateDirs.load(spark, stateDir, Parts)
       .map { case Seq(m, f) => TokState(m, f) }
 
-  /** Persist through [[graft.util.StateDirs.save]]. */
-  def save(state: TokState, stateDir: String): Unit =
-    graft.util.StateDirs.save(stateDir, Parts.zip(Seq(state.merges, state.fertility)))
-
-  /** CLI — `TokenizerMaintenance <stateDir> <oldSnap> <newSnap>`:
-    * bootstrap-train on the old snapshot when no state exists, tick to
-    * the new one, persist, print the fertility card. */
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: TokenizerMaintenance <stateDir> <oldSnap> <newSnap>")
-    val Array(stateDir, oldPath, newPath) = args.take(3)
-    val spark = graft.GraftSession.forMain("graft-tokenizer-maintenance")
-    val cols = Seq(col("doc_id"), col("text"), col("lang"), col("source"))
-    val oldSnap = spark.read.parquet(oldPath).select(cols: _*)
-    val newSnap = spark.read.parquet(newPath).select(cols: _*)
-    val state = load(spark, stateDir).getOrElse(rebuild(oldSnap, "doc_id", "text"))
-    val next = nightly(state, oldSnap, newSnap, "doc_id", "text")
-    save(next, stateDir)
-    card(load(spark, stateDir).get).orderBy(col("lang")).show(100, false)
-    spark.stop()
-  }
+  /** Persist through [[graft.util.StateDirs.save]]; returns the rows
+    * written per part: merges, fertility. The merge table is written
+    * last: Spark's shared listener thread keeps the last query it saw
+    * end, with its plan's broadcast relations, until its next event,
+    * and the merge table's plan has none, where the counters' joins
+    * hold about 16 MB. */
+  def save(state: TokState, stateDir: String): Seq[Long] =
+    graft.util.StateDirs.save(stateDir, Parts.zip(Seq(state.merges, state.fertility)).reverse)
+      .reverse
 }

@@ -129,8 +129,9 @@ object UnigramMaintenance {
     graft.util.StateDirs.load(spark, stateDir, Parts)
       .map { case Seq(p, f) => UniState(p, f) }
 
-  /** Persist through [[graft.util.StateDirs.save]]. */
-  def save(state: UniState, stateDir: String): Unit =
+  /** Persist through [[graft.util.StateDirs.save]]; returns the rows
+    * written per part: pieces, fertility. */
+  def save(state: UniState, stateDir: String): Seq[Long] =
     graft.util.StateDirs.save(stateDir, Parts.zip(Seq(state.pieces, state.fertility)))
 
   /** CLI — `UnigramMaintenance <stateDir> <oldSnap> <newSnap>`:

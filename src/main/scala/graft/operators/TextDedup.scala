@@ -1028,19 +1028,19 @@ object TextDedup {
     * converges in ~12 rounds, not 1,000).
     *
     * The rounds run on [[graft.util.Fixpoint.untilStable]] over
-    * [[graft.util.Fixpoint.symmetricEdges]]; the old label rides in
-    * each round's state, so the changed count is one aggregation. A
-    * node seen only in an `(x, x)` pair is its own component. Returns
-    * (id, label). */
+    * [[graft.util.Fixpoint.closure]], which reads `pairs` once; the
+    * old label rides in each round's state, so the changed count is
+    * one aggregation. A node seen only in an `(x, x)` pair is its own
+    * component. Returns (id, label). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     // Round 1 folds into the init: label₀ = least(id, min neighbor).
     // (SHUFFLE_HASH hints on the label-side joins measured slower at
     // sf0.1: the checkpointed edges scan back as UnknownPartitioning
     // and re-exchange every round, where a broadcast keeps them put.)
-    val edges = Fixpoint.symmetricEdges(pairs, "a", "b")
-    val selfOnly = pairs.filter(col("a") === col("b"))
-      .select(col("a").as("src"), col("b").as("dst"))
-    val init = edges.unionByName(selfOnly)
+    // The closure keeps (x, x), so a node seen only in a self-pair gets
+    // a label; in a round it only offers a node its own label.
+    val edges = Fixpoint.closure(pairs, "a", "b")
+    val init = edges
       .groupBy(col("dst"))
       .agg(min(col("src")).as("_nmin"))
       .select(col("dst").as("id"),

@@ -15,19 +15,26 @@ import org.apache.spark.storage.StorageLevel
 object Fixpoint {
 
   /** The undirected closure of `edges` as `(src, dst)`: both
-    * directions, no self-loops, deduplicated, materialized once
-    * (DISK_ONLY: every round reads it; it is the loop's largest). */
-  def symmetricEdges(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
+    * directions, self-loops kept, deduplicated, materialized once
+    * (DISK_ONLY: every round reads it; it is the loop's largest).
+    * Each row of `edges` is read once: the reverse edge comes from the
+    * same row, not from a second scan. */
+  def closure(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     require(edges.columns.contains(srcCol) && edges.columns.contains(dstCol),
       s"edges must carry '$srcCol'/'$dstCol' columns " +
         s"(got ${edges.columns.mkString(", ")})")
-    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .filter(col("src") =!= col("dst"))
+    val (s, d) = (col(srcCol), col(dstCol))
+    edges.select(explode(array(
+        struct(s.as("src"), d.as("dst")), struct(d.as("src"), s.as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .distinct()
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
   }
+
+  /** [[closure]] without self-loops. */
+  def symmetricEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    closure(edges, srcCol, dstCol).filter(col("src") =!= col("dst"))
 
   /** `rounds` applications of `step` to `init`. Runs no job. */
   def iterate(init: DataFrame, rounds: Int)(

@@ -2,7 +2,8 @@ package graft.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The persisted-state protocol of every nightly state dir, through
   * the Hadoop FileSystem API — valid on any Spark-writable scheme
@@ -10,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the nightly jobs' state dirs actually are on a cluster.
   *
   * A state dir holds one parquet relation, or named parts each in its
-  * own subdirectory. [[save]] materializes EVERYTHING under `<dir>.tmp`
+  * own subdirectory. [[save]] counts the rows of each part as it
+  * writes it and materializes EVERYTHING under `<dir>.tmp`
   * first (the previous state stays readable throughout — the next
   * state's plans read the previous files), then [[promote]] flips via
   * two whole-directory renames: `<dir>` → `<dir>.old`, then `<dir>.tmp`
@@ -26,18 +28,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that a crash between the two renames left parked at `<dir>.old`. */
 object StateDirs {
 
-  /** Stage each named part under `<dir>.tmp/<name>`, then [[promote]]. */
-  def save(dir: String, parts: Seq[(String, DataFrame)]): Unit = {
-    parts.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$dir.tmp/$name")
-    }
+  /** Stage each named part under `<dir>.tmp/<name>`, then [[promote]].
+    * Returns each part's row count, in order, observed as it is
+    * written. */
+  def save(dir: String, parts: Seq[(String, DataFrame)]): Seq[Long] = {
+    val rows = parts.map { case (name, df) => write(df, s"$dir.tmp/$name") }
     promote(parts.head._2.sparkSession.sparkContext.hadoopConfiguration, dir)
+    rows
   }
 
-  /** One-relation state: stage `df` as `<dir>.tmp`, then [[promote]]. */
-  def save(dir: String, df: DataFrame): Unit = {
-    df.write.mode("overwrite").parquet(s"$dir.tmp")
+  /** One-relation state: stage `df` as `<dir>.tmp`, then [[promote]].
+    * Returns its row count. */
+  def save(dir: String, df: DataFrame): Long = {
+    val rows = write(df, s"$dir.tmp")
     promote(df.sparkSession.sparkContext.hadoopConfiguration, dir)
+    rows
+  }
+
+  /** Write `df` as parquet at `path` and return the rows written,
+    * counted by an `Observation` on the write itself (no second job).
+    * Unnamed, so families saving concurrently never share a name. */
+  private def write(df: DataFrame, path: String): Long = {
+    val seen = Observation()
+    df.observe(seen, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(path)
+    seen.get("rows").asInstanceOf[Long]
   }
 
   /** The scheme-aware filesystem of `dir` when `dir` holds a state,

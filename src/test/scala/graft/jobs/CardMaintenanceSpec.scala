@@ -70,6 +70,16 @@ class CardMaintenanceSpec extends SparkSpec {
     ticked.wordIndex.filter(col("lang") === "es").count() shouldBe 0L
   }
 
+  test("save returns the card's rows, a language with no word and a null language left out") {
+    val snap = df(base ++ Seq((7L, "", "xx", "web"), (8L, "solo", null, "web")))
+    val st = CardMaintenance.rebuild(snap, "doc_id", "text")
+    st.langSums.count() shouldBe 4L // en, es, xx, null
+    val dir = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "card").toString
+    CardMaintenance.save(st, dir) shouldBe 2L
+    CardMaintenance.card(CardMaintenance.load(spark, dir).get).count() shouldBe 2L
+  }
+
   test("ticks chain: two nightly ticks equal one rebuild of the final snapshot") {
     val s0 = df(base)
     val s1 = df(base :+ ((6L, "ein zwei", "de", "web")))

@@ -1,5 +1,9 @@
 package graft.jobs
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -97,5 +101,48 @@ class RunNightlySpec extends SparkSpec {
     m2.centroids.map { case (c, v) => (c, v.toSeq) } shouldBe
       m1.centroids.map { case (c, v) => (c, v.toSeq) }
     m2.scales.toSeq shouldBe m1.scales.toSeq
+  }
+
+  /** A bootstrap tick d0 → d1, then a steady tick d1 → d2 with its
+    * Spark jobs counted. */
+  private class SteadyTick {
+    val dir: String = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "nightlyj")
+      .toString
+    val first: String = RunNightly.tick(spark, dir,
+      docsAt(3L, patch = false), docsAt(7L, patch = false), vecsAt(false), vecsAt(true))
+    private val sc = spark.sparkContext
+    private val started = new AtomicInteger
+    private val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(counter)
+    val second: String =
+      try {
+        val line = RunNightly.tick(spark, dir,
+          docsAt(7L, patch = false), docsAt(7L, patch = true), vecsAt(true), vecsAt(true))
+        ListenerBusDrain(sc)
+        line
+      } finally sc.removeSparkListener(counter)
+    val jobs: Int = started.get
+  }
+  private lazy val steady = new SteadyTick
+
+  test("the [nightly] line of a bootstrap and a steady tick") {
+    steady.first shouldBe "[nightly] index: hashes=450 bands=1800 | card: langs=5 | " +
+      "vecindex: postings=500 | cov: pairs=2080 | tokenizer: merges=10 langs=5 | " +
+      "guards: capped_buckets=1 pairs_est=17788 budget=100000000 binding=true"
+    steady.second shouldBe "[nightly] index: hashes=450 bands=1800 | card: langs=5 | " +
+      "vecindex: postings=500 | cov: pairs=2080 | tokenizer: merges=10 langs=5 | " +
+      "guards: capped_buckets=1 pairs_est=17787 budget=100000000 binding=true"
+  }
+
+  test("job budget: one steady tick") {
+    // 110 with the counts and the card's languages observed as the
+    // saves write; the tick that reloaded and recounted every state
+    // after the barrier ran 133-134
+    steady.jobs should be <= 110
   }
 }

@@ -107,6 +107,23 @@ class StateDirsSpec extends SparkSpec {
     StateDirs.load(spark, dir).get.as[Long].collect() shouldBe Array(3L)
   }
 
+  test("save returns each part's row count, a zero-row part included") {
+    val dir = freshDir()
+    val names = Seq("a", "b", "c")
+    StateDirs.save(dir, names.zip(Seq(
+      spark.range(0, 7).toDF("v"), Seq.empty[Long].toDF("v"), Seq(1L, 2L).toDF("v")))) shouldBe
+      Seq(7L, 0L, 2L)
+    StateDirs.load(spark, dir, names).get.map(_.count()) shouldBe Seq(7L, 0L, 2L)
+  }
+
+  test("a one-relation save returns its row count, zero rows included") {
+    val dir = freshDir()
+    StateDirs.save(dir, spark.range(0, 5).toDF("v")) shouldBe 5L
+    StateDirs.load(spark, dir).get.count() shouldBe 5L
+    StateDirs.save(dir, spark.range(0, 0).toDF("v")) shouldBe 0L
+    StateDirs.load(spark, dir).get.count() shouldBe 0L
+  }
+
   // The crash window between promote's two renames: the live state is
   // parked at `<dir>.old`, `<dir>` is gone, the new copy sits in `.tmp`.
   private def parkLive(dir: String): Unit =

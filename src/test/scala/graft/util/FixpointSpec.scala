@@ -31,6 +31,17 @@ class FixpointSpec extends SparkSpec {
       .as[(Long, Long)].collect() shouldBe Array((5L, 5L))
   }
 
+  test("connectedComponents reads each row of pairs once") {
+    // 40 paths of 20 nodes; each path's first node comes as an (x, x) pair
+    val rows = spark.sparkContext.longAccumulator("pairRows")
+    val tap = udf { (a: Long) => rows.add(1L); a }
+    val pairs = spark.range(0, 800)
+      .select(tap($"id").as("a"), when($"id" % 20 === 0, $"id").otherwise($"id" - 1).as("b"))
+    val labels = TextDedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    rows.value shouldBe 800L
+    labels shouldBe (0L until 800L).map(i => i -> (i - i % 20)).toMap
+  }
+
   /** Component label = the component's minimum id, by union-find. */
   private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
