@@ -19,9 +19,10 @@ import graft.util.Par
   * {{{
   *   activity → summaries  ∥  flow  ∥  email  ∥  counts,  then compact
   * }}}
-  * as four concurrent [[graft.util.Par]] items; each pipeline keeps its
-  * own per-tier Par inside, which nests. The pipelines write disjoint
-  * tables.
+  * as four concurrent [[graft.util.Par]] items; the flow cascade and the
+  * summaries keep their own per-tier Par inside, which nests. The
+  * pipelines write disjoint tables: each event family is one banded
+  * table, its sample tiers views of it (see [[EventImporter]]).
   *
   * Landing layout (one dir per pipeline, day files inside):
   * {{{
@@ -104,10 +105,10 @@ final class RunImport(
     * rebuilt wholesale by writeDays each run and need no pass. */
   def compact(spark: SparkSession, imported: Map[String, Seq[LocalDate]]): Unit = {
     def tablesFor(pipeline: String): Seq[DayPartitionedTable] = pipeline match {
-      case "activity" => tiers.map(activity.table)
-      case "flow" => tiers.flatMap(t =>
-        Seq(flow.importer.table(t), flow.metadataTable(t), flow.experimentsTable(t)))
-      case "email"  => tiers.map(email.table)
+      case "activity" => Seq(activity.events)
+      case "flow" => flow.importer.events +:
+        tiers.flatMap(t => Seq(flow.metadataTable(t), flow.experimentsTable(t)))
+      case "email"  => Seq(email.events)
       case "counts" => Seq(counts.table)
       case _        => Seq.empty
     }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -44,7 +44,7 @@ import graft.store.DayPartitionedTable
   *       updated from the aggregate, the rows absorbed (`:263-304`).
   *
   * Each rewrite writes only the partitions that contain a matched flow
-  * (collected driver-side from the joined frame), plus day d.
+  * (observed on the joined frame's checkpoint), plus day d.
   *
   * `updateHorizon` bounds the update scan to metadata partitions with
   * export_date ≥ day − horizon. Flows span at most 2 calendar days by
@@ -240,12 +240,15 @@ final class FlowPipeline(
     // No broadcast() hint: `upd` is one row per flow of one day —
     // bounded by day volume, but at 100 TB/day that is far past
     // broadcast range, and a literal hint overrides AQE's size check.
+    // The days holding a matched row are observed on the checkpoint's
+    // own job; unnamed, because the tiers rewrite concurrently.
     val u = upd.withColumnRenamed("flow_id", "u_flow_id")
+    val seen = Observation()
     val joined = rows.join(u, col("flow_id") === col("u_flow_id"), "left")
+      .observe(seen,
+        collect_set(when(matched, col("export_date").cast("string"))).as("days"))
       .localCheckpoint()
-    val days = day.toString +: joined.filter(matched)
-      .select(col("export_date").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val days = day.toString +: seen.get("days").asInstanceOf[scala.collection.Seq[String]].toSeq
     t.writeDays(
       update(joined)
         .filter(col("export_date").cast("string").isin(days: _*))

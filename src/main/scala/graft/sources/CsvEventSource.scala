@@ -59,10 +59,10 @@ object CsvEventSource {
   /** Read one day file into a typed staging frame.
     *
     * Single text-scan lineage: sanitize → field-count policy → split →
-    * type → truncate. Error accounting forces one count job over the
+    * type → truncate. Error accounting forces one aggregate job over the
     * cleaned lines (the COPY analog does the same work server-side);
-    * the frame under the result is persisted because the three-tier
-    * import reads it once per tier.
+    * the frame under the result is persisted because the import and
+    * the flow cascade each read it.
     */
   def readDay(
       spark: SparkSession,
@@ -71,22 +71,26 @@ object CsvEventSource {
       policy: FieldCountPolicy = Strict,
       maxError: Int = 100,
       persist: Boolean = true): DataFrame =
-    kept(flaggedDay(spark, file, family, policy, maxError, persist))
+    kept(flaggedDay(spark, file, family, policy, maxError, persist).flagged)
 
   /** The staging rows of a [[flaggedDay]] frame: its error rows dropped. */
   def kept(flagged: DataFrame): DataFrame =
     flagged.filter(!col("_error")).drop("_error")
 
-  /** [[readDay]] before [[kept]]: every typed line with its `_error`
-    * flag, past the MAXERROR gate — the frame that was persisted, so a
-    * caller that holds it can release exactly that cache. */
+  /** A day file past the MAXERROR gate: every typed line with its
+    * `_error` flag — the frame that was persisted, so a caller that
+    * holds it can release exactly that cache — and the kept lines'
+    * MIN/MAX(timestamp), null when no line is kept. */
+  final case class GatedDay(flagged: DataFrame, minTs: java.lang.Long, maxTs: java.lang.Long)
+
+  /** [[readDay]] before [[kept]]. */
   private[sources] def flaggedDay(
       spark: SparkSession,
       file: String,
       family: EventFamily,
       policy: FieldCountPolicy,
       maxError: Int,
-      persist: Boolean): DataFrame = {
+      persist: Boolean): GatedDay = {
     val n = 1 + family.columns.size // timestamp + declared columns
     val raw = spark.read.text(file)
     val clean = raw.filter(!blocklisted(col("value"))) // A6
@@ -125,17 +129,20 @@ object CsvEventSource {
     gate(parsed.withColumn("_error", isError).drop("f"), maxError, persist)
   }
 
-  /** Persist `flagged` (when asked) and count its error rows: over
-    * `maxError`, release it and throw [[MaxErrorExceeded]]. */
+  /** Persist `flagged` (when asked), then one aggregate: its error
+    * rows, and the MIN/MAX timestamp of the others. Over `maxError`
+    * errors, release it and throw [[MaxErrorExceeded]]. */
   private[sources] def gate(
-      flagged: DataFrame, maxError: Int, persist: Boolean): DataFrame = {
+      flagged: DataFrame, maxError: Int, persist: Boolean): GatedDay = {
     if (persist) flagged.persist(StorageLevel.MEMORY_AND_DISK)
-    val errors = flagged.filter(col("_error")).count() // MAXERROR gate
-    if (errors > maxError) {
+    val keptTs = when(!col("_error"), col("timestamp"))
+    val r = flagged.agg(count(when(col("_error"), 1)), min(keptTs), max(keptTs)).head()
+    val errors = r.getLong(0)
+    if (errors > maxError) { // MAXERROR gate
       flagged.unpersist()
       throw new MaxErrorExceeded(errors, maxError)
     }
-    flagged
+    GatedDay(flagged, r.getAs[java.lang.Long](1), r.getAs[java.lang.Long](2))
   }
 
   /** A2 — enumerate day files under a landing dir: `{prefix}-YYYY-MM-DD

@@ -31,7 +31,7 @@ import graft.model.EventFamily
   * ignored, missing keys are ''.
   *
   * Scale shape: one text scan per day file, all parsing/typing in one
-  * codegen'd projection (from_json + casts), one count job for the
+  * codegen'd projection (from_json + casts), one aggregate job for the
   * MAXERROR gate — identical to the CSV path.
   */
 object JsonEventSource {
@@ -44,7 +44,7 @@ object JsonEventSource {
       family: EventFamily,
       maxError: Int = 100,
       persist: Boolean = true): DataFrame =
-    CsvEventSource.kept(flaggedDay(spark, file, family, maxError, persist))
+    CsvEventSource.kept(flaggedDay(spark, file, family, maxError, persist).flagged)
 
   /** [[readDay]] before [[CsvEventSource.kept]], as
     * [[CsvEventSource.flaggedDay]]. */
@@ -53,7 +53,7 @@ object JsonEventSource {
       file: String,
       family: EventFamily,
       maxError: Int,
-      persist: Boolean): DataFrame = {
+      persist: Boolean): CsvEventSource.GatedDay = {
     // Parse everything as STRING first, then apply the shared typing
     // rules — identical error semantics to the CSV path (a JSON number
     // token coerces to its string form, so 123 and "123" both type).

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.model.EventFamily
 
@@ -21,11 +21,12 @@ import graft.model.EventFamily
 sealed trait LandingFormat {
   def listDays(
       spark: SparkSession, dir: String, prefix: String): Seq[(LocalDate, String)]
-  /** One day file as its persisted `_error`-flagged frame past the
-    * MAXERROR gate; [[CsvEventSource.kept]] of it is the staging frame,
-    * and the caller unpersists it when the day is done. */
+  /** One day file past the MAXERROR gate; [[CsvEventSource.kept]] of
+    * its persisted `flagged` frame is the staging frame, and the caller
+    * unpersists that frame when the day is done. */
   def readDay(
-      spark: SparkSession, file: String, family: EventFamily, maxError: Int): DataFrame
+      spark: SparkSession, file: String, family: EventFamily, maxError: Int
+  ): CsvEventSource.GatedDay
 }
 
 object LandingFormat {
@@ -37,7 +38,8 @@ object LandingFormat {
         spark: SparkSession, dir: String, prefix: String): Seq[(LocalDate, String)] =
       CsvEventSource.listDays(spark, dir, prefix)
     override def readDay(
-        spark: SparkSession, file: String, family: EventFamily, maxError: Int): DataFrame =
+        spark: SparkSession, file: String, family: EventFamily, maxError: Int
+    ): CsvEventSource.GatedDay =
       CsvEventSource.flaggedDay(
         spark, file, family, CsvEventSource.Strict, maxError, persist = true)
   }
@@ -49,7 +51,8 @@ object LandingFormat {
         spark: SparkSession, dir: String, prefix: String): Seq[(LocalDate, String)] =
       JsonEventSource.listDays(spark, dir, prefix)
     override def readDay(
-        spark: SparkSession, file: String, family: EventFamily, maxError: Int): DataFrame =
+        spark: SparkSession, file: String, family: EventFamily, maxError: Int
+    ): CsvEventSource.GatedDay =
       JsonEventSource.flaggedDay(spark, file, family, maxError, persist = true)
   }
 

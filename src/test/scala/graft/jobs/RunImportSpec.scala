@@ -154,9 +154,13 @@ class RunImportSpec extends SparkSpec {
     val job = new RunImport(wh, wh)
     val tier = job.tiers.find(_.suffix == "").get
     val day = LocalDate.parse("2024-03-10")
-    val actT = job.activity.table(tier)      // dayCol=day, sortCol=ts
+    val actT = job.activity.events           // dayCol=day, sortCol=ts, banded
     val metaT = job.flow.metadataTable(tier) // dayCol=export_date, sortCol=begin_time
 
+    // a day's partition directory: the activity table stores the 100%
+    // tier's own cohorts under band=100
+    def partition(t: graft.store.DayPartitionedTable, d: LocalDate): String =
+      s"${t.path}/${t.dayCol}=$d" + t.bandCol.fold("")(b => s"/$b=100")
     // simulate a partition accreted by many small incremental appends:
     // five single-row writes straight into the partition dir
     def fragment(t: graft.store.DayPartitionedTable, d: LocalDate,
@@ -164,10 +168,10 @@ class RunImportSpec extends SparkSpec {
       (1 to 5).foreach { i =>
         Seq((i.toLong, s"u$i")).toDF(sortColName, "uid")
           .coalesce(1).write.mode("append")
-          .parquet(s"${t.path}/${t.dayCol}=$d")
+          .parquet(partition(t, d))
       }
     def parquetFiles(t: graft.store.DayPartitionedTable, d: LocalDate): Int =
-      Option(new java.io.File(s"${t.path}/${t.dayCol}=$d").listFiles())
+      Option(new java.io.File(partition(t, d)).listFiles())
         .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
 
     fragment(actT, day, "ts")
@@ -185,5 +189,34 @@ class RunImportSpec extends SparkSpec {
       parquetFiles(metaT, day.minusDays(h.toLong)) shouldBe metaT.filesPerDay
     }
     parquetFiles(metaT, day.minusDays(3)) shouldBe 5 // untouched stays as-is
+  }
+
+  test("job budget: one RunImport night after a first night") {
+    val root = TmpDirs.fresh("spec-runimport-budget-landing")
+    val wh = TmpDirs.fresh("spec-runimport-budget-wh")
+    def land(day: LocalDate): Unit = {
+      def oneDay(df: org.apache.spark.sql.DataFrame) =
+        df.filter(col("day").cast("string") === day.toString)
+      CsvEventSource.writeLanding(spark,
+        oneDay(SparkEntry.activityStaging(spark, sfSmoke)), s"$root/activity", "activity")
+      CsvEventSource.writeLanding(spark,
+        oneDay(SparkEntry.flowStaging(spark, sfSmoke)), s"$root/flow", "flow")
+      CsvEventSource.writeLanding(spark,
+        oneDay(SparkEntry.emailStaging(spark, sfSmoke)), s"$root/email", "email-events")
+      CsvEventSource.appendLines(spark, s"$root/counts/fxa-basic-metrics-$day.txt",
+        Seq(s"$day,10,7"))
+    }
+    val (d1, d2) = (LocalDate.parse("2024-01-02"), LocalDate.parse("2024-01-03"))
+    val job = new RunImport(wh, root, countsBegin = LocalDate.parse("2024-01-01"))
+    land(d1)
+    job.run(spark, dayUntil = Some(d1))
+    land(d2)
+    val (imported, jobs) = jobsDuring(job.run(spark, dayUntil = Some(d2)))
+    imported.values.foreach(_ shouldBe Seq(d2))
+    // 70 measured; the parent, which wrote each tier's table, ran 112
+    jobs should be <= 70
+    // each event family is stored once; its tiers are views
+    new java.io.File(wh).list().filter(_.contains("_events")).sorted.toSeq shouldBe
+      Seq("activity_events", "email_events", "flow_events")
   }
 }

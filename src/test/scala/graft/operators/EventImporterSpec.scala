@@ -121,4 +121,42 @@ class EventImporterSpec extends SparkSpec {
       }
     }
   }
+
+  test("tier views over several days equal a tierSlice recount, days and all") {
+    // a 0-day tier beside two longer ones, as the nightly benchmark runs
+    val tiers = Seq(
+      SampleTier(10, Period.ofDays(14), "_sampled_10"),
+      SampleTier(50, Period.ofDays(0), "_sampled_50"),
+      SampleTier(100, Period.ofDays(7), ""))
+    val wh = TmpDirs.fresh("spec-imp-views-wh")
+    val imp = new EventImporter(wh, Schemas.activity, tiers)
+    val dir = TmpDirs.fresh("spec-imp-views-landing")
+    val staged = SparkEntry.activityStaging(spark, sfSmoke)
+    CsvEventSource.writeLanding(spark,
+      staged.filter($"day" <= lit("2024-01-20").cast("date")), dir, "activity")
+    imp.run(spark, dir, "activity").size shouldBe 20
+    val maxDay = LocalDate.parse("2024-01-20")
+    val landed = (1 to 20).map(d => LocalDate.parse(f"2024-01-$d%02d"))
+    val typed = imp.typedStaging(
+      CsvEventSource.readDay(spark, s"$dir/*.csv", Schemas.activity, persist = false)).cache()
+    def perDay(df: DataFrame): Map[LocalDate, Long] =
+      df.groupBy($"day".cast("string")).count().collect()
+        .map(r => LocalDate.parse(r.getString(0)) -> r.getLong(1)).toMap
+    tiers.foreach { tier =>
+      withClue(tier) {
+        val view = imp.table(tier)
+        val want = perDay(landed.map(d => imp.tierSlice(typed, tier, d, maxDay)).reduce(_ union _))
+        perDay(view.read(spark)) shouldBe want
+        view.days(spark) shouldBe want.keys.toSeq.sorted
+        view.minDay(spark) shouldBe want.keys.minOption
+        view.maxDay(spark) shouldBe want.keys.maxOption
+        landed.foreach(d => view.hasDay(spark, d) shouldBe want.contains(d))
+        view.read(spark).columns.toSeq shouldBe
+          ("ts" +: Schemas.activity.permColumns :+ "day")
+      }
+    }
+    typed.unpersist()
+    imp.table(tiers(1)).days(spark) shouldBe Seq(maxDay)
+    new java.io.File(wh).list().filterNot(_.startsWith(".")).toSeq shouldBe Seq("activity_events")
+  }
 }

@@ -284,9 +284,11 @@ class FlowPipelineSpec extends SparkSpec {
   }
 
   test("job budget: the one-day incremental flow night") {
-    // 59 measured with one aggregate and one rewrite per table per
-    // tier-day; the per-statement cascade ran 97-98
-    incremental.jobs should be <= 59
+    // 38 measured with one write of the banded events table per day
+    // and the matched days observed on each rewrite's checkpoint; 59
+    // with a write per tier and a collect per rewrite, and the
+    // per-statement cascade ran 97-98
+    incremental.jobs should be <= 38
   }
 
   test("the cascade releases its local checkpoints once a tier-day is written") {

@@ -141,4 +141,43 @@ class DayPartitionedTableSpec extends SparkSpec {
     pruned.select(countDistinct(col("day"))).as[Long].head() shouldBe 3
     assert(plan.contains("PartitionFilters"), s"no partition filters in plan:\n$plan")
   }
+
+  test("declared schema: read returns the inferred schema and starts no job, plain and banded") {
+    val root = TmpDirs.fresh("spec-store-schema")
+    val plain = new DayPartitionedTable(root, "plain", sortCol = Some("ts"))
+    val banded = new DayPartitionedTable(root, "banded", sortCol = Some("ts"),
+      bandCol = Some("band"))
+    val ev = eventsWithDay.withColumn("note", lit(null).cast("string"))
+    plain.writeDays(ev)
+    banded.writeDays(ev.withColumn("band", when(col("user_id") % 2 === 0, 10).otherwise(100)))
+    Seq(plain, banded).foreach { t =>
+      withClue(t.name) {
+        new java.io.File(s"${t.path}/_schema.json").isFile shouldBe true
+        val inferred = spark.read.option("basePath", t.path).parquet(t.path)
+        val (declared, jobs) = jobsDuring(t.read(spark))
+        jobs shouldBe 0
+        declared.schema shouldBe inferred.schema
+        declared.schema.map(f => (f.name, f.dataType, f.nullable)) shouldBe
+          inferred.schema.map(f => (f.name, f.dataType, f.nullable))
+        declared.collect().map(_.toString).sorted shouldBe
+          inferred.collect().map(_.toString).sorted
+      }
+    }
+    banded.read(spark).columns.takeRight(2) shouldBe Array("day", "band")
+  }
+
+  test("a banded table's view reads its bands within its retention, without the band") {
+    val root = TmpDirs.fresh("spec-store-view")
+    val t = new DayPartitionedTable(root, "ev", sortCol = Some("ts"), bandCol = Some("band"))
+    t.writeDays(eventsWithDay.withColumn("band", when(col("user_id") % 3 === 0, 10).otherwise(100)))
+    val v = t.view(10, java.time.Period.ofDays(4)) // newest day 2024-01-30
+    v.days(spark) shouldBe (26 to 30).map(d => LocalDate.parse(f"2024-01-$d%02d"))
+    v.read(spark).columns should not contain "band"
+    v.read(spark).count() shouldBe t.read(spark)
+      .filter(col("band") === 10 && col("day") >= lit("2024-01-26").cast("date")).count()
+    an[UnsupportedOperationException] should be thrownBy v.clearDay(spark, LocalDate.parse("2024-01-30"))
+    t.expireBands(spark, u => LocalDate.parse(if (u == 10) "2024-01-28" else "2024-01-02"))
+    v.minDay(spark) shouldBe Some(LocalDate.parse("2024-01-28"))
+    t.minDay(spark) shouldBe Some(LocalDate.parse("2024-01-02"))
+  }
 }

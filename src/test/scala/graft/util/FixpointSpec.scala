@@ -7,6 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 import graft.operators.{Analytics, TextDedup}
@@ -66,8 +67,11 @@ class FixpointSpec extends SparkSpec {
       TextDedup.connectedComponents(edges.toDF("a", "b"))
         .as[(Long, Long)].collect().toMap == unionFindLabels(edges)
     }
-    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(15), prop)
-    assert(result.passed, result.status)
+    // a fixed seed, so every run draws the same 15 graphs
+    val seed = 20261020L
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(15).withInitialSeed(Seed(seed)), prop)
+    assert(result.passed, s"seed $seed: ${result.status}")
   }
 
   test("iterate keeps the plan flat when each round reads its state twice") {
